@@ -14,8 +14,7 @@ object Explain {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val doTime = args.contains("time")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", math.max(cpus, 4)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val df = SparkEntry.queries(name)(spark, dir)
     println(df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))

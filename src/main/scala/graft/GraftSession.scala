@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * at cluster scale AQE's advisory partition size takes over).
   */
 object GraftSession {
-  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
+  private def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)

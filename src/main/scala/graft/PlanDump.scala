@@ -32,8 +32,7 @@ object PlanDump {
       System.err.println(s"[plandump] unknown queries: ${unknown.mkString(", ")}")
       sys.exit(2)
     }
-    val spark = GraftSession.builder(s"local[$cpus]", math.max(cpus, 4)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val names = requested
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, dir)

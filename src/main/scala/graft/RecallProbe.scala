@@ -27,8 +27,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", math.max(cpus, 4)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     val nL = operators.IvfAnn.adaptiveNLists(spark, dir)
     val np = operators.IvfAnn.adaptiveNProbe(spark, dir)

@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def time(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f

@@ -69,8 +69,7 @@ object ScaleProbe {
     require(Set("suffix", "rotate")(wordMode),
       s"wordmode must be suffix|rotate, got $wordMode")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", math.max(cpus, 4)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     def reps(df: DataFrame): DataFrame =
       df.withColumn("r", explode(expr(s"sequence(0L, ${factor - 1}L)")))

@@ -3,7 +3,7 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Runs through `GraftSession.builder` so correctness is measured on the
+  * Runs through `GraftSession.local` so correctness is measured on the
   * same tuned engine (AQE, broadcast threshold, UTC, nanos-as-long) that
   * Bench measures and users would run.
   */
@@ -14,8 +14,7 @@ object Verify {
     // and gets the full sweep.
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", math.max(cpus, 4)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     var failed = 0
     SparkEntry.queries

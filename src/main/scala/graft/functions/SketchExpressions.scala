@@ -214,13 +214,14 @@ object SketchKernels {
     * Bit-identical to the hex formulation it replaces
     * (Σ |conv(substr(hex(a),2i+1,2),16,10) − conv(...b...)| over equal
     * 32-byte frames) with zero string materialization and no
-    * interpreted higher-order lambda per frame pair.
+    * interpreted higher-order lambda per frame pair. Frames must be of
+    * equal length; [[SadBytes]] returns NULL otherwise, as the hex
+    * formulation does.
     */
   def sadBytes(a: Array[Byte], b: Array[Byte]): Long = {
-    val n = math.min(a.length, b.length)
     var s = 0L
     var i = 0
-    while (i < n) {
+    while (i < a.length) {
       s += math.abs((a(i) & 0xff) - (b(i) & 0xff))
       i += 1
     }
@@ -452,12 +453,15 @@ case class TrigramHashes(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** `sad_bytes(a, b)` — two BinaryType frames → LongType SAD. */
+/** `sad_bytes(a, b)` — two BinaryType frames → LongType SAD; NULL when
+  * the frames differ in length (no per-position pairing exists).
+  */
 case class SadBytes(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def prettyName: String = "sad_bytes"
   override def dataType: DataType = LongType
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -467,12 +471,18 @@ case class SadBytes(left: Expression, right: Expression)
           s"sad_bytes requires two BINARY arguments, got ${l.sql} and ${r.sql}")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchKernels.sadBytes(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+    if (x.length != y.length) null else SketchKernels.sadBytes(x, y)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.SketchKernels.sadBytes($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""if ($a.length != $b.length) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = graft.functions.SketchKernels.sadBytes($a, $b);
+         |}""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SadBytes =

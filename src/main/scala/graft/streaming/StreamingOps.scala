@@ -1,10 +1,12 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import graft.queries.QueryModule
-import scala.jdk.CollectionConverters._
 
 /** Streaming operator surface (SURVEY.md §2B "Streaming"): event-time
   * windows (tumbling / sliding / session), watermarking, streaming
@@ -29,21 +31,112 @@ import scala.jdk.CollectionConverters._
   */
 object StreamingOps extends QueryModule {
 
-  /** Normalize a raw-footer `ts` column to session-local TimestampType —
-    * the streaming-source twin of the dispatch in [[graft.Tables.events]]
-    * (NANOS-as-long → integer-truncate to micros; MICROS-NTZ → cast under
-    * the UTC session timezone). `withWatermark` rejects TIMESTAMP_NTZ, so
-    * a raw-schema stream MUST pass through this before watermarking.
+  /** The fixture events table as a file STREAM with `ts` normalised to
+    * session-local TimestampType. The table is one parquet FILE in a
+    * read-only dir, so it is addressed as a glob (file-source
+    * requirement) with the dir as basePath, using the RAW footer schema;
+    * `ts` then goes through the streaming twin of the dispatch in
+    * [[graft.Tables.events]] (NANOS-as-long → integer-truncate to micros;
+    * MICROS-NTZ → cast under the UTC session timezone) — `withWatermark`
+    * rejects TIMESTAMP_NTZ. One file drains as one AvailableNow data
+    * micro-batch under the file source's default read limits.
     */
-  private def normalizeTs(raw: org.apache.spark.sql.types.StructType,
-                          stream: DataFrame): DataFrame =
+  private def eventStream(spark: SparkSession, dir: String): DataFrame = {
+    val raw = spark.read.parquet(s"$dir/events.parquet").schema
+    val stream = spark.readStream.schema(raw)
+      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
     raw("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        stream.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
+      case LongType => stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => stream.withColumn("ts", col("ts").cast(TimestampType))
       case _ => stream
     }
+  }
+
+  /** Append `batches` to the replay directory `dir`, each as ONE parquet
+    * file numbered after the files already there, with a pinned,
+    * strictly increasing modification time. The file source drains
+    * oldest-first, so the returned stream over `dir` (schema from the
+    * files just written, `maxFilesPerTrigger = 1`) runs every file as
+    * exactly one micro-batch, in order.
+    */
+  private def replayFiles(dir: Path, batches: Seq[DataFrame]): DataFrame = {
+    Files.createDirectories(dir)
+    val done = dir.toFile.listFiles().count(_.getName.endsWith(".parquet"))
+    val written = batches.zipWithIndex.map { case (df, i) =>
+      val n = done + i + 1
+      val stage = dir.resolve(s"stage$n")
+      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      val part = stage.toFile.listFiles().find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
+      val dst = Files.move(part.toPath, dir.resolve(f"b$n%02d.parquet"))
+      dst.toFile.setLastModified(1000000L * n)
+      dst.toString
+    }
+    val spark = batches.head.sparkSession
+    spark.readStream.schema(spark.read.parquet(written: _*).schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*.parquet")
+  }
+
+  /** Run `body` over a fresh temp directory for a replay gate's files,
+    * checkpoints and output, and delete it afterwards, failed or not.
+    * The body's result must not read from the directory: [[drain]]'s is
+    * materialized, the foreachBatch gates `localCheckpoint` theirs.
+    */
+  private def withReplayRoot[T](gate: String)(body: Path => T): T = {
+    val root = Files.createTempDirectory(s"${gate}_replay")
+    try body(root) finally deleteRecursively(root.toFile)
+  }
+
+  private def deleteRecursively(f: java.io.File): Unit = {
+    val kids = f.listFiles()
+    if (kids != null) kids.foreach(deleteRecursively)
+    f.delete()
+    ()
+  }
+
+  /** Drain a gate's streaming query to completion: a memory sink, one
+    * `Trigger.AvailableNow` run in `mode`, under [[withDrainPartitions]].
+    * Fails loudly unless the run took exactly `dataBatches` data
+    * micro-batches, because every gate's oracle is exact only for its own
+    * batch schedule: a single-batch gate's finalization predicates
+    * (q130's update mode would emit several rows per user across
+    * batches, q132's prev=0 collapse breaks, q126's dedup window would
+    * no longer span the input), a replay gate's protocol. `check` sees
+    * the run's progress for gate-specific assertions.
+    *
+    * The result is localCheckpoint-materialized and the sink's temp view
+    * dropped — a memory sink pins every emitted row in driver memory for
+    * as long as its view is reachable, so without this every sweep would
+    * leak one UUID view per gate per run.
+    */
+  private def drain(spark: SparkSession, df: DataFrame, mode: String, gate: String,
+      dataBatches: Int, check: Array[StreamingQueryProgress] => Unit = _ => ()): DataFrame = {
+    val name = s"${gate}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    try {
+      val q = withDrainPartitions(spark) {
+        val started = df.writeStream.format("memory").queryName(name)
+          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+        started.awaitTermination()
+        started
+      }
+      requireDataBatches(q, gate, dataBatches)
+      check(q.recentProgress)
+      spark.table(name).localCheckpoint()
+    } finally spark.catalog.dropTempView(name)
+  }
+
+  /** Fail unless `q` ran exactly `n` data micro-batches (the no-data
+    * watermark-finalization batch has numInputRows == 0 and is excluded).
+    */
+  private def requireDataBatches(q: StreamingQuery, gate: String, n: Int): Unit = {
+    val ran = q.recentProgress.count(_.numInputRows > 0)
+    if (ran != n) throw new IllegalStateException(
+      s"$gate drained in $ran data micro-batches; its oracle is exact only for $n " +
+        "(fixture or replay files, or the file source's read limits, changed?)")
+  }
+
+  private def droppedByWatermark(progress: Array[StreamingQueryProgress]): Long =
+    progress.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
 
   /** Run a gate drain with `spark.sql.shuffle.partitions` scoped down.
     * The stateful-stage partition count is pinned into each query's
@@ -77,29 +170,6 @@ object StreamingOps extends QueryModule {
     * replay semantics (batch-0 retry, checkpoint recovery, offset
     * replay) REQUIRE a private checkpoint root to mean anything.
     */
-  /** Materialize a replay gate's result, then release the per-run state
-    * it accumulated: the memory-sink temp view (whose sink pins every
-    * emitted row in driver memory for as long as the view is reachable)
-    * and the on-disk replay root. Without this, every bench/spec sweep
-    * leaks one temp dir + one UUID view PER GATE PER RUN. The result is
-    * localCheckpoint-materialized first so the returned DataFrame no
-    * longer depends on either.
-    */
-  private def finalizeReplay(spark: SparkSession, viewName: Option[String],
-      root: java.nio.file.Path)(out: DataFrame): DataFrame = {
-    val materialized = out.localCheckpoint()
-    viewName.foreach(spark.catalog.dropTempView(_))
-    deleteRecursively(root.toFile)
-    materialized
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
-
   private def withDrainPartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
@@ -121,26 +191,6 @@ object StreamingOps extends QueryModule {
       case Some(p) => spark.conf.set(key, p)
       case None => spark.conf.unset(key)
     }
-  }
-
-  /** Guard for the single-batch oracles (q126/q130/q132): their
-    * finalization predicates are exact ONLY when AvailableNow drains the
-    * fixture as ONE data micro-batch — q130's update mode would emit
-    * multiple rows per user across batches, q132's prev=0 collapse
-    * breaks, q126's dedup window would no longer span the whole input.
-    * That holds because the fixture is one parquet file under the file
-    * source's default read limits, but nothing asserted it at run time;
-    * fail LOUDLY here so a multi-file fixture or a Spark read-limit
-    * default change surfaces as an error, not a silent oracle mismatch.
-    * (The no-data watermark-finalization batch has numInputRows == 0
-    * and is excluded by construction.)
-    */
-  private def assertSingleDataBatch(
-      q: org.apache.spark.sql.streaming.StreamingQuery, name: String): Unit = {
-    val n = q.recentProgress.count(_.numInputRows > 0)
-    if (n != 1) throw new IllegalStateException(
-      s"$name drained in $n data micro-batches; its oracle is exact only for 1 " +
-        "(multi-file fixture, or changed file-source read limits?)")
   }
 
   /** Tumbling 5-minute windows per event type: count + sum. */
@@ -350,32 +400,18 @@ object StreamingOps extends QueryModule {
     * AvailableNow takes the backlog in bounded batches (unset here —
     * the one-file fixture is a single batch by construction).
     */
-  def q100SqlSessionStream(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    // the fixture table is one parquet FILE in a read-only dir: address
-    // it as a glob (file source requirement) with the dir as basePath,
-    // using the RAW footer schema, then normalize `ts` to TimestampType
-    // exactly like the batch path (Tables.events handles every footer
-    // variant the driver has generated: NANOS-as-long and MICROS-NTZ)
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    stream.withWatermark("ts", "0 seconds")
+  def q100SqlSessionStream(spark: SparkSession, dir: String): DataFrame = {
+    eventStream(spark, dir).withWatermark("ts", "0 seconds")
       .createOrReplaceTempView("events_stream")
     val agg = spark.sql(
       """SELECT session_window(ts, '5 minutes') AS w, user_id,
         |       count(*) AS n, round(sum(value), 2) AS sum_value
         |FROM events_stream
         |GROUP BY session_window(ts, '5 minutes'), user_id""".stripMargin)
-    val name = s"q100_sessions_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg
       .select(col("w").getField("start").as("session_start"), col("user_id"),
         col("n"), col("sum_value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("user_id", "session_start")
+    drain(spark, agg, "append", "q100", dataBatches = 1)
+      .orderBy("user_id", "session_start")
   }
 
   /** q149: UPDATE-mode windowed aggregation, driver-gated — the output-
@@ -396,20 +432,9 @@ object StreamingOps extends QueryModule {
     * sink, the usual choice when the sink is a keyed store rather than
     * an append log.
     */
-  def q149UpdateModeWindows(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    val agg = tumbling(stream.withWatermark("ts", "0 seconds"))
-    val name = s"q149_updwindows_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assertSingleDataBatch(q, "q149")
-    spark.table(name).orderBy("w_start", "event_type")
-  }
+  def q149UpdateModeWindows(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, tumbling(eventStream(spark, dir).withWatermark("ts", "0 seconds")),
+      "update", "q149", dataBatches = 1).orderBy("w_start", "event_type")
 
   /** q154: UNION of two independently-watermarked streams into one
     * windowed aggregation — the multi-source topology (two Kafka topics,
@@ -425,22 +450,12 @@ object StreamingOps extends QueryModule {
     * `least(max ts | even, max ts | odd)`: the min-watermark rule
     * itself is what the gate pins, not just the union plumbing.
     */
-  def q154StreamUnionWindows(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    def branch(even: Boolean): DataFrame = {
-      val s0 = spark.readStream.schema(raw)
-        .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-      normalizeTs(raw, s0)
-        .filter(pmod(col("event_id"), lit(2)) === (if (even) 0 else 1))
-        .withWatermark("ts", "0 seconds")
-    }
-    val agg = tumbling(branch(even = true).unionAll(branch(even = false)))
-    val name = s"q154_union_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start", "event_type")
+  def q154StreamUnionWindows(spark: SparkSession, dir: String): DataFrame = {
+    def branch(even: Boolean): DataFrame = eventStream(spark, dir)
+      .filter(pmod(col("event_id"), lit(2)) === (if (even) 0 else 1))
+      .withWatermark("ts", "0 seconds")
+    drain(spark, tumbling(branch(even = true).unionAll(branch(even = false))),
+      "append", "q154", dataBatches = 1).orderBy("w_start", "event_type")
   }
 
   /** q146: DYNAMIC-gap session windows, driver-gated end-to-end — the
@@ -464,20 +479,9 @@ object StreamingOps extends QueryModule {
     * sessions); the gap expression is evaluated scan-side, adding no
     * exchange.
     */
-  def q146DynamicGapSessions(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    val agg = dynamicSessions(stream.withWatermark("ts", "0 seconds"))
-    val name = s"q146_dynsessions_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("user_id", "session_start")
-  }
+  def q146DynamicGapSessions(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, dynamicSessions(eventStream(spark, dir).withWatermark("ts", "0 seconds")),
+      "append", "q146", dataBatches = 1).orderBy("user_id", "session_start")
 
   /** The q146 transform on a plain frame — runs identically as a batch
     * query or a streaming one (Structured Streaming's batch↔stream
@@ -509,27 +513,17 @@ object StreamingOps extends QueryModule {
     * buckets); a production backlog drains in bounded batches via
     * `maxFilesPerTrigger` (single-file fixture = one batch).
     */
-  def q111SqlTumblingStream(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    stream.withWatermark("ts", "0 seconds")
+  def q111SqlTumblingStream(spark: SparkSession, dir: String): DataFrame = {
+    eventStream(spark, dir).withWatermark("ts", "0 seconds")
       .createOrReplaceTempView("events_stream_tumble")
     val agg = spark.sql(
       """SELECT window(ts, '5 minutes') AS w, event_type,
         |       count(*) AS n, round(sum(value), 2) AS sum_value
         |FROM events_stream_tumble
         |GROUP BY window(ts, '5 minutes'), event_type""".stripMargin)
-    val name = s"q111_tumble_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg
       .select(col("w").getField("start").as("w_start"), col("event_type"),
         col("n"), col("sum_value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start", "event_type")
+    drain(spark, agg, "append", "q111", dataBatches = 1).orderBy("w_start", "event_type")
   }
 
   /** q125: the sliding-window member of the streaming-SQL trio (q100
@@ -545,27 +539,17 @@ object StreamingOps extends QueryModule {
     * the partial agg (the expand is map-side — overlap factor, not data
     * skew); state is watermark-bounded to the open windows only.
     */
-  def q125SqlSlidingStream(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    stream.withWatermark("ts", "0 seconds")
+  def q125SqlSlidingStream(spark: SparkSession, dir: String): DataFrame = {
+    eventStream(spark, dir).withWatermark("ts", "0 seconds")
       .createOrReplaceTempView("events_stream_slide")
     val agg = spark.sql(
       """SELECT window(ts, '10 minutes', '5 minutes') AS w, event_type,
         |       count(*) AS n, round(sum(value), 2) AS sum_value
         |FROM events_stream_slide
         |GROUP BY window(ts, '10 minutes', '5 minutes'), event_type""".stripMargin)
-    val name = s"q125_slide_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg
       .select(col("w").getField("start").as("w_start"), col("event_type"),
         col("n"), col("sum_value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start", "event_type")
+    drain(spark, agg, "append", "q125", dataBatches = 1).orderBy("w_start", "event_type")
   }
 
   /** q200: CUSTOM OBJECT-HEAP UDAF inside streaming state — per closed
@@ -581,23 +565,13 @@ object StreamingOps extends QueryModule {
     * oracle applies that finalization predicate and the plain window
     * top-3 it must equal.
     */
-  def q200StreamTopK(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
+  def q200StreamTopK(spark: SparkSession, dir: String): DataFrame = {
     val topk = udaf(new graft.functions.SketchAggregators.TopKAggregator(3))
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    val agg = stream.withWatermark("ts", "0 seconds")
+    val agg = eventStream(spark, dir).withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(topk(col("value"), col("event_id")).as("top"))
-    val name = s"q200_topk_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg
       .select(col("window.start").as("w_start"), col("event_type"), col("top"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(spark, agg, "append", "q200", dataBatches = 1)
       .select(col("w_start"), col("event_type"),
         posexplode(col("top")).as(Seq("pos", "kv")))
       .select(col("w_start"), col("event_type"),
@@ -617,26 +591,16 @@ object StreamingOps extends QueryModule {
     * (q190's device windowed), so the gate certifies the sketch through
     * the streaming path bit-for-bit — not a tolerance band.
     */
-  def q201StreamDistinct(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
+  def q201StreamDistinct(spark: SparkSession, dir: String): DataFrame = {
     val hll = udaf(new graft.functions.SketchAggregators.HllAggregator(12))
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    val agg = stream.withWatermark("ts", "0 seconds")
+    val agg = eventStream(spark, dir).withWatermark("ts", "0 seconds")
       .withColumn("h",
         conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10).cast("long"))
       .groupBy(window(col("ts"), "5 minutes"))
       .agg(hll(col("h")).as("est"), count(lit(1)).as("n_events"))
-    val name = s"q201_hll_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg
       .select(col("window.start").as("w_start"),
         round(col("est"), 4).as("est_users"), col("n_events"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start")
+    drain(spark, agg, "append", "q201", dataBatches = 1).orderBy("w_start")
   }
 
   /** q208: STREAM–STREAM JOIN CHAINED INTO A WINDOWED AGGREGATION —
@@ -661,18 +625,13 @@ object StreamingOps extends QueryModule {
     * each side only inside the interval constraint; the agg holds open
     * windows — both watermark-bounded.
     */
-  def q208JoinThenWindow(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    def branch(): DataFrame = normalizeTs(raw,
-      spark.readStream.schema(raw).option("basePath", dir)
-        .parquet(s"$dir/events.parque[t]"))
-    val clicks = branch()
+  def q208JoinThenWindow(spark: SparkSession, dir: String): DataFrame = {
+    val clicks = eventStream(spark, dir)
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", "0 seconds")
-    val purchases = branch()
+    val purchases = eventStream(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
         col("ts").as("purchase_ts"))
@@ -686,26 +645,10 @@ object StreamingOps extends QueryModule {
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR"), 1L)
           .otherwise(0L)).as("n_near"))
-    val name = s"q208_jw_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg
       .select(col("window.start").as("w_start"), col("n_pairs"), col("n_near"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start")
+    drain(spark, agg, "append", "q208", dataBatches = 1).orderBy("w_start")
   }
 
-  /** q345: q314's OHLCV bars AS A STREAM — the candlestick feed a
-    * `ws-to-kafka` consumer publishes live (q227 streams the tape
-    * statistics; bars add the FIRST/LAST-BY semantic, which in a
-    * streaming aggregation means the min_by/max_by extremum state must
-    * merge correctly ACROSS micro-batches under the unique
-    * (µs, event_id) struct order): per (event_type, 1-hour event-time
-    * window), open/high/low/close/turnover in append mode, 0 s
-    * watermark, AvailableNow drain. The oracle is q314's arithmetic
-    * under the q111 finalization predicate — a wrong cross-batch
-    * extremum merge (e.g. last-batch-wins open) diverges immediately.
-    */
   /** The OHLCV streaming aggregation shared by q345 and its chunked
     * cross-batch merge spec: integer-cents extremum state under the
     * unique (µs, event_id) struct order, per (1 h window, type).
@@ -723,15 +666,19 @@ object StreamingOps extends QueryModule {
       count(lit(1)).as("n"),
       sum("cents").as("turn_c"))
 
-  def q345StreamOhlcv(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    val agg = ohlcvAgg(stream.withWatermark("ts", "0 seconds"))
-    val name = s"q345_ohlcv_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg
+  /** q345: q314's OHLCV bars AS A STREAM — the candlestick feed a
+    * `ws-to-kafka` consumer publishes live (q227 streams the tape
+    * statistics; bars add the FIRST/LAST-BY semantic, which in a
+    * streaming aggregation means the min_by/max_by extremum state must
+    * merge correctly ACROSS micro-batches under the unique
+    * (µs, event_id) struct order): per (event_type, 1-hour event-time
+    * window), open/high/low/close/turnover in append mode, 0 s
+    * watermark, AvailableNow drain. The oracle is q314's arithmetic
+    * under the q111 finalization predicate — a wrong cross-batch
+    * extremum merge (e.g. last-batch-wins open) diverges immediately.
+    */
+  def q345StreamOhlcv(spark: SparkSession, dir: String): DataFrame = {
+    val agg = ohlcvAgg(eventStream(spark, dir).withWatermark("ts", "0 seconds"))
       .select(col("window.start").as("w_start"), col("event_type"),
         (col("open_c").cast("double") / 100.0).as("open"),
         (col("high_c").cast("double") / 100.0).as("high"),
@@ -739,10 +686,7 @@ object StreamingOps extends QueryModule {
         (col("close_c").cast("double") / 100.0).as("close"),
         col("n"),
         (col("turn_c").cast("double") / 100.0).as("turnover"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(spark, agg, "append", "q345", dataBatches = 1)
   }
 
   /** q227: the reference domain's analytics AS A STREAM — q226's
@@ -755,13 +699,8 @@ object StreamingOps extends QueryModule {
     * query bit-for-bit on closed windows — the oracle is q226's
     * arithmetic under the q111 finalization predicate.
     */
-  def q227StreamMicrostructure(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    val agg = stream.withWatermark("ts", "0 seconds")
+  def q227StreamMicrostructure(spark: SparkSession, dir: String): DataFrame = {
+    val agg = eventStream(spark, dir).withWatermark("ts", "0 seconds")
       .select(col("ts"),
         floor(col("value") * lit(100.0d) + lit(0.5d)).cast("long").as("p"),
         (col("event_id") % 7 + 1).cast("long").as("q"),
@@ -771,14 +710,9 @@ object StreamingOps extends QueryModule {
         sum(col("p") * col("q")).as("pq"),
         sum(when(col("side") === 0, col("q")).otherwise(0L)).as("buy_vol"),
         sum(when(col("side") === 1, col("q")).otherwise(0L)).as("sell_vol"))
-    val name = s"q227_tape_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg
       .select(col("window.start").as("w_start"), col("n_trades"), col("volume"),
         col("pq"), col("buy_vol"), col("sell_vol"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(spark, agg, "append", "q227", dataBatches = 1)
       .select(col("w_start"), col("n_trades"), col("volume"),
         round(col("pq").cast("double") / col("volume").cast("double") / lit(100.0d), 6)
           .as("vwap"),
@@ -802,14 +736,9 @@ object StreamingOps extends QueryModule {
     * single-batch drain is asserted (update mode emits per touched key
     * per batch).
     */
-  def q228OrderBookRebuild(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
+  def q228OrderBookRebuild(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    val upd = stream.select(
+    val upd = eventStream(spark, dir).select(
       col("event_id").as("seq"),
       concat(lit("MKT"), (col("user_id") % 4).cast("string")).as("market"),
       (col("event_id") % 101 === 0).as("reset"),
@@ -818,13 +747,7 @@ object StreamingOps extends QueryModule {
         .cast("double") / lit(4.0d)).as("price"),
       ((col("event_id") % 17).cast("double") / lit(2.0d)).as("size"))
       .as[BookUpdate]
-    val name = s"q228_book_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = OrderBook.topOfBook(upd).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assertSingleDataBatch(q, "q228_order_book_rebuild")
-    spark.table(name)
+    drain(spark, OrderBook.topOfBook(upd).toDF(), "update", "q228", dataBatches = 1)
       // an empty side is NaN in TopOfBook (the operator's in-band
       // marker); surface it as SQL NULL — the relational spelling the
       // oracle's aggregate produces (a reset-then-cleared book is a
@@ -835,6 +758,23 @@ object StreamingOps extends QueryModule {
         col("bid_depth").cast("long").as("bid_depth"),
         col("ask_depth").cast("long").as("ask_depth"))
       .orderBy("market")
+  }
+
+  /** The chained pipeline itself, shared by the q139 gate and the
+    * chunking-invariance spec: watermark → 1-minute partials →
+    * 5-minute rollup of the partials.
+    */
+  def chainedWindowAgg(events: DataFrame): DataFrame = {
+    val minutes = events.withWatermark("ts", "0 seconds")
+      .groupBy(window(col("ts"), "1 minute").as("w1"), col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("v"))
+    minutes
+      .groupBy(window(window_time(col("w1")), "5 minutes").as("w5"),
+        col("event_type"))
+      .agg(count(lit(1)).as("n_minutes"), sum("n").as("n_events"),
+        round(sum("v"), 2).as("sum_value"))
+      .select(col("w5").getField("start").as("w_start"), col("event_type"),
+        col("n_minutes"), col("n_events"), col("sum_value"))
   }
 
   /** q139: CHAINED streaming aggregation — two stateful window
@@ -858,36 +798,9 @@ object StreamingOps extends QueryModule {
     * surviving layer-1 rows, pinning that the chain really aggregated
     * partials (a collapsed single-layer agg could not produce it).
     */
-  /** The chained pipeline itself, shared by the q139 gate and the
-    * chunking-invariance spec: watermark → 1-minute partials →
-    * 5-minute rollup of the partials.
-    */
-  def chainedWindowAgg(events: DataFrame): DataFrame = {
-    val minutes = events.withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), "1 minute").as("w1"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("v"))
-    minutes
-      .groupBy(window(window_time(col("w1")), "5 minutes").as("w5"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_minutes"), sum("n").as("n_events"),
-        round(sum("v"), 2).as("sum_value"))
-      .select(col("w5").getField("start").as("w_start"), col("event_type"),
-        col("n_minutes"), col("n_events"), col("sum_value"))
-  }
-
-  def q139ChainedWindowAgg(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    val name = s"q139_chain_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = chainedWindowAgg(stream)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start", "event_type")
-  }
+  def q139ChainedWindowAgg(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, chainedWindowAgg(eventStream(spark, dir)), "append", "q139",
+      dataBatches = 1).orderBy("w_start", "event_type")
 
   /** q126: streaming dedup, driver-gated — `dropDuplicatesWithinWatermark`
     * over a watermarked file-source stream, drained AvailableNow in APPEND
@@ -906,23 +819,14 @@ object StreamingOps extends QueryModule {
     * dedup window — the unbounded-state hazard `dropDuplicates` has on
     * streams is the thing this operator exists to fix.
     */
-  def q126StreamDedup(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0)
-    val dedup = stream
+  def q126StreamDedup(spark: SparkSession, dir: String): DataFrame = {
+    val dedup = eventStream(spark, dir)
       .select(col("user_id"), col("event_type"),
         date_trunc("minute", col("ts")).as("ts_min"))
       .withWatermark("ts_min", "0 seconds")
       .dropDuplicatesWithinWatermark("user_id", "event_type", "ts_min")
-    val name = s"q126_dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = dedup.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assertSingleDataBatch(q, "q126")
-    spark.table(name).orderBy("user_id", "event_type", "ts_min")
+    drain(spark, dedup, "append", "q126", dataBatches = 1)
+      .orderBy("user_id", "event_type", "ts_min")
   }
 
   /** q257: WATERMARK LATE-DATA DROP census — the one event-time
@@ -954,53 +858,39 @@ object StreamingOps extends QueryModule {
     * watermark truncation cannot straddle a 5-minute boundary (window
     * ends are whole minutes; ts carries µs noise).
     */
-  def q257WatermarkDrops(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val ev = graft.Tables.events(spark, dir)
+  def q257WatermarkDrops(spark: SparkSession, dir: String): DataFrame = withReplayRoot("q257") { root =>
+    val census = lateCensus(replayFiles(root, lateDataBatches(spark, dir)))
+    drain(spark, census, "append", "q257", dataBatches = 3, check = p =>
+      if (droppedByWatermark(p) == 0) throw new IllegalStateException(
+        "q257 observed zero watermark drops — the late batch was not late " +
+          "(batch order or watermark protocol changed?)"))
+      .orderBy("w_start", "event_type")
+  }
+
+  /** q257's three-batch late-data schedule, shared by q259/q277/q278:
+    * the history minus a held-out late subset (`event_id % 5 = 0 ∧
+    * ts < cut`), the stream head (`ts ≥ cut`, advances the watermark past
+    * the history), then the held-out subset — now genuinely late.
+    */
+  private def lateDataBatches(spark: SparkSession, dir: String): Seq[DataFrame] = {
+    val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
     val cut = lit("2024-01-25").cast("timestamp")
     val late = pmod(col("event_id"), lit(5)) === 0 && col("ts") < cut
-    val replayRoot = java.nio.file.Files.createTempDirectory("q257_replay")
-    def emitBatch(df: DataFrame, n: Int): Unit = {
-      val stage = replayRoot.resolve(s"stage$n")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-      val dst = replayRoot.resolve(f"b$n%02d.parquet")
-      java.nio.file.Files.move(part, dst)
-      // pinned, strictly increasing modTimes — deterministic batch order
-      dst.toFile.setLastModified(1000000L * n)
-    }
-    emitBatch(ev.filter(!late && col("ts") < cut), 1)
-    emitBatch(ev.filter(col("ts") >= cut), 2)
-    emitBatch(ev.filter(late), 3)
-    val schema = spark.read.parquet(replayRoot.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayRoot.toString + "/*.parquet")
-    val agg = stream.withWatermark("ts", "10 minutes")
+    Seq(ev.filter(!late && col("ts") < cut), ev.filter(col("ts") >= cut), ev.filter(late))
+  }
+
+  /** The q257/q259/q278 census over a replay stream: per (5-minute
+    * window, type) count and sum under a 10-minute watermark, values
+    * riding integer cents so the cross-batch merge is order-invariant.
+    */
+  private def lateCensus(stream: DataFrame): DataFrame =
+    stream.withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("sc"))
       .select(col("w.start").as("w_start"), col("event_type"), col("n"),
         round(col("sc") / 100.0, 2).as("sum_value"))
-    val name = s"q257_wmdrop_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches != 3) throw new IllegalStateException(
-      s"q257 drained in $dataBatches data micro-batches; the drop gate " +
-        "needs exactly 3 (replay files or read limits changed?)")
-    val dropped = q.recentProgress
-      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    if (dropped == 0) throw new IllegalStateException(
-      "q257 observed zero watermark drops — the late batch was not late " +
-        "(batch order or watermark protocol changed?)")
-    finalizeReplay(spark, Some(name), replayRoot)(
-      spark.table(name).orderBy("w_start", "event_type"))
-  }
 
   /** q259: UPDATE-MODE multi-batch RE-EMISSION gate — q257's sibling on
     * the other output mode. Same 3-batch pinned replay; in update mode
@@ -1020,49 +910,12 @@ object StreamingOps extends QueryModule {
     * the same watermark-bounded state and emits deltas, the shape a
     * 100 TB dashboard sink consumes.
     */
-  def q259UpdateReemission(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val cut = lit("2024-01-25").cast("timestamp")
-    val late = pmod(col("event_id"), lit(5)) === 0 && col("ts") < cut
-    val replayRoot = java.nio.file.Files.createTempDirectory("q259_replay")
-    def emitBatch(df: DataFrame, n: Int): Unit = {
-      val stage = replayRoot.resolve(s"stage$n")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-      val dst = replayRoot.resolve(f"b$n%02d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(1000000L * n)
-    }
-    emitBatch(ev.filter(!late && col("ts") < cut), 1)
-    emitBatch(ev.filter(col("ts") >= cut), 2)
-    emitBatch(ev.filter(late), 3)
-    val schema = spark.read.parquet(replayRoot.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayRoot.toString + "/*.parquet")
-    val agg = stream.withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("sc"))
-      .select(col("w.start").as("w_start"), col("event_type"), col("n"),
-        round(col("sc") / 100.0, 2).as("sum_value"))
-    val name = s"q259_upd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches != 3) throw new IllegalStateException(
-      s"q259 drained in $dataBatches data micro-batches; the gate needs 3")
-    val dropped = q.recentProgress
-      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    if (dropped == 0) throw new IllegalStateException(
-      "q259 observed zero watermark drops — the late batch was not late")
-    finalizeReplay(spark, Some(name), replayRoot)(
-      spark.table(name).orderBy("w_start", "event_type", "n"))
+  def q259UpdateReemission(spark: SparkSession, dir: String): DataFrame = withReplayRoot("q259") { root =>
+    val census = lateCensus(replayFiles(root, lateDataBatches(spark, dir)))
+    drain(spark, census, "update", "q259", dataBatches = 3, check = p =>
+      if (droppedByWatermark(p) == 0) throw new IllegalStateException(
+        "q259 observed zero watermark drops — the late batch was not late"))
+      .orderBy("w_start", "event_type", "n")
   }
 
   /** q269: stream–stream LEFT-OUTER JOIN null-emission protocol —
@@ -1092,9 +945,8 @@ object StreamingOps extends QueryModule {
     * join state is watermark-bounded on both sides; late data costs
     * no state.
     */
-  def q269OuterJoinNullProtocol(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val ev = graft.Tables.events(spark, dir)
+  def q269OuterJoinNullProtocol(spark: SparkSession, dir: String): DataFrame = withReplayRoot("q269") { root =>
+    val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     val cut = lit("2024-01-25").cast("timestamp")
     val clicks = ev.filter(col("event_type") === "click")
@@ -1104,29 +956,13 @@ object StreamingOps extends QueryModule {
       .select(col("event_id").as("purchase_id"), col("user_id").as("pu"),
         col("ts").as("purchase_ts"))
     val heldout = pmod(col("purchase_id"), lit(5)) === 0 && col("purchase_ts") < cut
-    val root = java.nio.file.Files.createTempDirectory("q269_replay")
-    def emitBatch(df: DataFrame, side: String, n: Int): Unit = {
-      val stage = root.resolve(s"stage_${side}_$n")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-      val dst = root.resolve(side).resolve(f"b$n%02d.parquet")
-      java.nio.file.Files.createDirectories(dst.getParent)
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(1000000L * n)
-    }
-    emitBatch(clicks.filter(col("click_ts") < cut), "left", 1)
-    emitBatch(clicks.filter(col("click_ts") >= cut), "left", 2)
-    emitBatch(purchases.filter(!heldout && col("purchase_ts") < cut), "right", 1)
-    emitBatch(purchases.filter(col("purchase_ts") >= cut), "right", 2)
-    emitBatch(purchases.filter(heldout), "right", 3)
-    def src(side: String, schema: org.apache.spark.sql.types.StructType) =
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(root.resolve(side).toString + "/*.parquet")
-    val ls = src("left", spark.read.parquet(root.resolve("left").toString).schema)
+    val ls = replayFiles(root.resolve("left"), Seq(
+        clicks.filter(col("click_ts") < cut), clicks.filter(col("click_ts") >= cut)))
       .withWatermark("click_ts", "10 minutes")
-    val rs = src("right", spark.read.parquet(root.resolve("right").toString).schema)
+    val rs = replayFiles(root.resolve("right"), Seq(
+        purchases.filter(!heldout && col("purchase_ts") < cut),
+        purchases.filter(col("purchase_ts") >= cut),
+        purchases.filter(heldout)))
       .withWatermark("purchase_ts", "10 minutes")
     val joined = ls.join(rs,
         col("cu") === col("pu") &&
@@ -1135,21 +971,12 @@ object StreamingOps extends QueryModule {
         "left_outer")
       .select(col("click_id"), col("cu").as("user_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"))
-    val name = s"q269_ojn_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = joined.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches < 3) throw new IllegalStateException(
-      s"q269 drained in $dataBatches data micro-batches; the protocol gate needs >= 3")
-    val dropped = q.recentProgress
-      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    if (dropped == 0) throw new IllegalStateException(
-      "q269 observed zero watermark drops — the held-out purchases were not late")
-    val out = spark.table(name)
+    val out = drain(spark, joined, "append", "q269", dataBatches = 3, check = p =>
+      if (droppedByWatermark(p) == 0) throw new IllegalStateException(
+        "q269 observed zero watermark drops — the held-out purchases were not late"))
     if (out.filter(col("purchase_id").isNull).isEmpty) throw new IllegalStateException(
       "q269 emitted zero null rows — eviction-time outer emission did not fire")
-    finalizeReplay(spark, Some(name), root)(out.orderBy("click_id", "purchase_id"))
+    out.orderBy("click_id", "purchase_id")
   }
 
   /** q274: SESSION-WINDOW MERGE/FRAGMENTATION protocol — what q100's
@@ -1170,10 +997,9 @@ object StreamingOps extends QueryModule {
     * bounded; the replay is the production shape for late-closing
     * sessions.
     */
-  def q274SessionMergeProtocol(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
+  def q274SessionMergeProtocol(spark: SparkSession, dir: String): DataFrame = withReplayRoot("q274") { root =>
     import org.apache.spark.sql.expressions.Window
-    val ev = graft.Tables.events(spark, dir)
+    val ev = Tables.events(spark, dir)
       .select(col("ts"), col("user_id"), col("value"))
     // the cut is DERIVED: 1 µs after the latest first-of-a-close-pair
     // timestamp (same user, gap < 5 min), so it provably lands INSIDE
@@ -1189,42 +1015,21 @@ object StreamingOps extends QueryModule {
       .select((col("mx") + expr("INTERVAL 1 MICROSECOND")).as("cut"))
       .localCheckpoint()
     def withCut(df: DataFrame): DataFrame = df.crossJoin(broadcast(cutDf))
-    val root = java.nio.file.Files.createTempDirectory("q274_replay")
-    def emitBatch(df: DataFrame, n: Int): Unit = {
-      val stage = root.resolve(s"stage$n")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-      val dst = root.resolve(f"b$n%02d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(1000000L * n)
-    }
-    emitBatch(withCut(ev).filter(col("ts") < col("cut")).drop("cut"), 1)
-    emitBatch(withCut(ev).filter(col("ts") >= col("cut")).drop("cut"), 2)
-    val schema = spark.read.parquet(root.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(root.toString + "/*.parquet")
+    val stream = replayFiles(root, Seq(
+      withCut(ev).filter(col("ts") < col("cut")).drop("cut"),
+      withCut(ev).filter(col("ts") >= col("cut")).drop("cut")))
     val agg = stream.withWatermark("ts", "0 seconds")
       .groupBy(session_window(col("ts"), "5 minutes").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("sc"))
       .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
         col("user_id"), col("n"), (col("sc") / 100.0).as("sum_value"))
-    val name = s"q274_smerge_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches != 2) throw new IllegalStateException(
-      s"q274 drained in $dataBatches data micro-batches; the merge gate needs 2")
-    val out = spark.table(name)
+    val out = drain(spark, agg, "append", "q274", dataBatches = 2)
     val straddlers = withCut(out).filter(col("session_start") < col("cut") &&
       col("session_end") > col("cut") + expr("INTERVAL 5 MINUTES")).count()
     if (straddlers == 0) throw new IllegalStateException(
       "q274 saw zero cut-straddling sessions — the cross-batch merge never fired")
-    finalizeReplay(spark, Some(name), root)(out.orderBy("user_id", "session_start", "n"))
+    out.orderBy("user_id", "session_start", "n")
   }
 
   /** q275: DEDUP STATE-EXPIRY / RE-ADMISSION protocol — the caveat in
@@ -1258,9 +1063,8 @@ object StreamingOps extends QueryModule {
     * exactly why WithinWatermark exists (plain dropDuplicates holds
     * keys forever).
     */
-  def q275DedupReadmission(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val ev = graft.Tables.events(spark, dir)
+  def q275DedupReadmission(spark: SparkSession, dir: String): DataFrame = withReplayRoot("q275") { root =>
+    val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     val cut = lit("2024-01-25").cast("timestamp")
     // held = the %5 subset (beyond-watermark late → dropped) PLUS the
@@ -1270,45 +1074,19 @@ object StreamingOps extends QueryModule {
     val held = col("ts") < cut &&
       (pmod(col("event_id"), lit(5)) === 0 ||
         col("ts") >= cut - expr("INTERVAL 1 HOUR"))
-    val root = java.nio.file.Files.createTempDirectory("q275_replay")
-    def emitBatch(df: DataFrame, n: Int): Unit = {
-      val stage = root.resolve(s"stage$n")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-      val dst = root.resolve(f"b$n%02d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(1000000L * n)
-    }
-    emitBatch(ev.filter(!held && col("ts") < cut), 1)
-    emitBatch(ev.filter(col("ts") >= cut), 2)
-    emitBatch(ev.filter(held), 3)
-    val schema = spark.read.parquet(root.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(root.toString + "/*.parquet")
-    val deduped = stream
+    val deduped = replayFiles(root, Seq(
+        ev.filter(!held && col("ts") < cut), ev.filter(col("ts") >= cut), ev.filter(held)))
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-    val name = s"q275_readmit_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = deduped.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches != 3) throw new IllegalStateException(
-      s"q275 drained in $dataBatches data micro-batches; the gate needs 3")
-    val dropped = q.recentProgress
-      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    if (dropped == 0) throw new IllegalStateException(
-      "q275 observed zero watermark drops — the held-out batch was not late")
-    val out = spark.table(name)
+    val out = drain(spark, deduped, "append", "q275", dataBatches = 3, check = p =>
+      if (droppedByWatermark(p) == 0) throw new IllegalStateException(
+        "q275 observed zero watermark drops — the held-out batch was not late"))
     val readmitted = out.groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("k")).filter(col("k") >= 2).count()
     if (readmitted == 0) throw new IllegalStateException(
       "q275 saw zero re-admissions — expired keys did not re-emit")
-    finalizeReplay(spark, Some(name), root)(out.orderBy("user_id", "event_type"))
+    out.orderBy("user_id", "event_type")
   }
 
   /** q277: COMPLETE-MODE no-drop gate — the third output mode, and the
@@ -1330,49 +1108,19 @@ object StreamingOps extends QueryModule {
     * watermark-live frontier; the gate documents the trade, not just
     * the semantics.
     */
-  def q277CompleteModeNoDrop(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val cut = lit("2024-01-25").cast("timestamp")
-    val late = pmod(col("event_id"), lit(5)) === 0 && col("ts") < cut
-    val root = java.nio.file.Files.createTempDirectory("q277_replay")
-    def emitBatch(df: DataFrame, n: Int): Unit = {
-      val stage = root.resolve(s"stage$n")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-      val dst = root.resolve(f"b$n%02d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(1000000L * n)
-    }
-    emitBatch(ev.filter(!late && col("ts") < cut), 1)
-    emitBatch(ev.filter(col("ts") >= cut), 2)
-    emitBatch(ev.filter(late), 3)
-    val schema = spark.read.parquet(root.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(root.toString + "/*.parquet")
-    val agg = stream.withWatermark("ts", "10 minutes")
+  def q277CompleteModeNoDrop(spark: SparkSession, dir: String): DataFrame = withReplayRoot("q277") { root =>
+    val agg = replayFiles(root, lateDataBatches(spark, dir))
+      .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("sc"))
       .select(col("w.start").as("w_start"), col("event_type"), col("n"),
         (col("sc") / 100.0).as("sum_value"))
-    val name = s"q277_complete_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches != 3) throw new IllegalStateException(
-      s"q277 drained in $dataBatches data micro-batches; the gate needs 3")
-    val dropped = q.recentProgress
-      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    if (dropped != 0) throw new IllegalStateException(
-      s"q277 dropped $dropped rows — complete mode must keep beyond-watermark data")
-    finalizeReplay(spark, Some(name), root)(
-      spark.table(name).orderBy("w_start", "event_type"))
+    drain(spark, agg, "complete", "q277", dataBatches = 3, check = { p =>
+      val dropped = droppedByWatermark(p)
+      if (dropped != 0) throw new IllegalStateException(
+        s"q277 dropped $dropped rows — complete mode must keep beyond-watermark data")
+    }).orderBy("w_start", "event_type")
   }
 
   /** q278: CHECKPOINT-RECOVERY gate — the durability contract every
@@ -1395,68 +1143,35 @@ object StreamingOps extends QueryModule {
     * and state stores recover per partition; nothing here is
     * fixture-shaped.
     */
-  def q278CheckpointRecovery(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val cut = lit("2024-01-25").cast("timestamp")
-    val late = pmod(col("event_id"), lit(5)) === 0 && col("ts") < cut
-    val root = java.nio.file.Files.createTempDirectory("q278_replay")
-    def emitBatch(df: DataFrame, n: Int): Unit = {
-      val stage = root.resolve(s"stage$n")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-      val dst = root.resolve(f"b$n%02d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(1000000L * n)
-    }
-    // only the history file exists when run 1 starts
-    emitBatch(ev.filter(!late && col("ts") < cut), 1)
-    val schema = spark.read.parquet(root.toString + "/b01.parquet").schema
-    def agg() = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root.toString + "/*.parquet")
-      stream.withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("sc"))
-        .select(col("w.start").as("w_start"), col("event_type"), col("n"),
-          round(col("sc") / 100.0, 2).as("sum_value"))
-    }
-    val ckpt = root.resolve("ckpt").toString
-    val out = root.resolve("out")
-    def start() = agg().writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.write.mode("overwrite").parquet(out.resolve(s"batch$id").toString)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    val q1 = start()
-    q1.awaitTermination()
-    val run1Batches = q1.recentProgress.count(_.numInputRows > 0)
-    if (run1Batches != 1) throw new IllegalStateException(
-      s"q278 run 1 drained $run1Batches data batches; the history file must be exactly 1")
-    // the head and late files arrive while the pipeline is down
-    emitBatch(ev.filter(col("ts") >= cut), 2)
-    emitBatch(ev.filter(late), 3)
-    val q2 = start()
-    q2.awaitTermination()
-    val dataBatches2 = q2.recentProgress.filter(_.numInputRows > 0)
-    if (dataBatches2.length != 2) throw new IllegalStateException(
-      s"q278 run 2 drained ${dataBatches2.length} data batches; the resumed backlog must be exactly 2")
-    if (dataBatches2.map(_.batchId).min == 0) throw new IllegalStateException(
-      "q278 run 2 restarted from batch 0 — offsets were not recovered from the checkpoint")
-    val dropped = q2.recentProgress
-      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    if (dropped == 0) throw new IllegalStateException(
-      "q278 observed zero watermark drops — the recovered watermark did not gate the late batch")
-    finalizeReplay(spark, None, root)(
+  def q278CheckpointRecovery(spark: SparkSession, dir: String): DataFrame =
+    withDrainPartitions(spark) { withReplayRoot("q278") { root =>
+      val Seq(history, head, late) = lateDataBatches(spark, dir)
+      // only the history file exists when run 1 starts
+      val census = lateCensus(replayFiles(root, Seq(history)))
+      val ckpt = root.resolve("ckpt").toString
+      val out = root.resolve("out")
+      def start() = census.writeStream
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          df.write.mode("overwrite").parquet(out.resolve(s"batch$id").toString)
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      val q1 = start()
+      q1.awaitTermination()
+      requireDataBatches(q1, "q278 run 1", 1)
+      // the head and late files arrive while the pipeline is down
+      replayFiles(root, Seq(head, late))
+      val q2 = start()
+      q2.awaitTermination()
+      requireDataBatches(q2, "q278 run 2", 2)
+      if (q2.recentProgress.filter(_.numInputRows > 0).map(_.batchId).min == 0)
+        throw new IllegalStateException(
+          "q278 run 2 restarted from batch 0 — offsets were not recovered from the checkpoint")
+      if (droppedByWatermark(q2.recentProgress) == 0) throw new IllegalStateException(
+        "q278 observed zero watermark drops — the recovered watermark did not gate the late batch")
       spark.read.parquet(out.toString + "/batch*")
-        .orderBy("w_start", "event_type"))
-  }
+        .orderBy("w_start", "event_type").localCheckpoint()
+    }}
 
   /** q127: stream–static enrichment, driver-gated end-to-end — the §2B
     * stream–static join row was spec-only (batch-equivalence in
@@ -1473,23 +1188,15 @@ object StreamingOps extends QueryModule {
     * watermark-bounded state. Every event matches a customer in the
     * fixture, so inner-join semantics are total and the oracle is exact.
     */
-  def q127StreamStaticWindow(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0).withWatermark("ts", "0 seconds")
+  def q127StreamStaticWindow(spark: SparkSession, dir: String): DataFrame = {
+    val stream = eventStream(spark, dir).withWatermark("ts", "0 seconds")
     val dim = Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment"))
     val agg = stream.join(dim, stream("user_id") === dim("c_custkey"))
       .groupBy(window(col("ts"), "5 minutes").as("w"), col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .select(col("w.start").as("w_start"), col("c_mktsegment"),
         col("n"), col("sum_value"))
-    val name = s"q127_enrich_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start", "c_mktsegment")
+    drain(spark, agg, "append", "q127", dataBatches = 1).orderBy("w_start", "c_mktsegment")
   }
 
   /** q185: stream–static LEFT-OUTER enrichment — q127's missing-key
@@ -1503,12 +1210,8 @@ object StreamingOps extends QueryModule {
     * Scale: the static dim broadcasts per micro-batch; the stream
     * never shuffles for the join — only the windowed agg keys it.
     */
-  def q185StreamStaticOuter(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val stream = normalizeTs(raw, stream0).withWatermark("ts", "0 seconds")
+  def q185StreamStaticOuter(spark: SparkSession, dir: String): DataFrame = {
+    val stream = eventStream(spark, dir).withWatermark("ts", "0 seconds")
     val dim = Tables.customer(spark, dir)
       .filter(substring(md5(col("c_custkey").cast("string")), 1, 1)
         .isin("0", "1", "2", "3") === false)
@@ -1519,11 +1222,7 @@ object StreamingOps extends QueryModule {
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .select(col("w.start").as("w_start"), col("segment"),
         col("n"), col("sum_value"))
-    val name = s"q185_outer_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start", "segment")
+    drain(spark, agg, "append", "q185", dataBatches = 1).orderBy("w_start", "segment")
   }
 
   /** q129: ARBITRARY keyed state through the driver gate — the §2B
@@ -1549,19 +1248,11 @@ object StreamingOps extends QueryModule {
     * path is what keeps keyed state BOUNDED (the q100-adjacent 100 TB
     * failure mode of grow-only state).
     */
-  def q129StatefulSessions(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    implicit val enc = org.apache.spark.sql.Encoders.product[Event]
-    val events = normalizeTs(raw, stream0).as[Event]
+  def q129StatefulSessions(spark: SparkSession, dir: String): DataFrame = {
+    val events = eventStream(spark, dir).as(Encoders.product[Event])
     val closed = StatefulOps.sessionCloseouts(events, gapMinutes = 5)
-    val name = s"q129_state_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = closed.toDF().writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).orderBy("user_id", "last_ts")
+    drain(spark, closed.toDF(), "append", "q129", dataBatches = 1)
+      .orderBy("user_id", "last_ts")
   }
 
   /** q130: `mapGroupsWithState` running enrichment through the driver
@@ -1582,22 +1273,11 @@ object StreamingOps extends QueryModule {
     * [[StatefulOps.runningBalance]] — q129's timeout path is the
     * bounded-state variant).
     */
-  def q130RunningBalance(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    implicit val enc = org.apache.spark.sql.Encoders.product[Event]
-    val events = normalizeTs(raw, stream0).as[Event]
-    val running = StatefulOps.runningBalance(events)
-    val name = s"q130_balance_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = running.toDF()
+  def q130RunningBalance(spark: SparkSession, dir: String): DataFrame = {
+    val running = StatefulOps.runningBalance(eventStream(spark, dir).as(Encoders.product[Event]))
+      .toDF()
       .select(col("user_id"), col("n_events"), round(col("balance"), 2).as("balance"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assertSingleDataBatch(q, "q130")
-    spark.table(name).orderBy("user_id")
+    drain(spark, running, "update", "q130", dataBatches = 1).orderBy("user_id")
   }
 
   /** q130b: the SAME running-balance fold through Spark 4's
@@ -1613,24 +1293,12 @@ object StreamingOps extends QueryModule {
     * Scale: identical to q130 — one user_id key exchange, one 24-byte
     * state row per user, now in the production state backend.
     */
-  def q130bRunningBalanceTws(spark: SparkSession, dir: String): DataFrame =
-    withDrainPartitions(spark) { withRocksDbProvider(spark) {
-      import org.apache.spark.sql.streaming.Trigger
-      val raw = spark.read.parquet(s"$dir/events.parquet").schema
-      val stream0 = spark.readStream.schema(raw)
-        .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-      implicit val enc = org.apache.spark.sql.Encoders.product[Event]
-      val events = normalizeTs(raw, stream0).as[Event]
-      val running = StatefulOps.runningBalanceTws(events)
-      val name = s"q130b_tws_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = running.toDF()
-        .select(col("user_id"), col("n_events"), round(col("balance"), 2).as("balance"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      assertSingleDataBatch(q, "q130b")
-      spark.table(name).orderBy("user_id")
-    }}
+  def q130bRunningBalanceTws(spark: SparkSession, dir: String): DataFrame = withRocksDbProvider(spark) {
+    val running = StatefulOps.runningBalanceTws(eventStream(spark, dir).as(Encoders.product[Event]))
+      .toDF()
+      .select(col("user_id"), col("n_events"), round(col("balance"), 2).as("balance"))
+    drain(spark, running, "update", "q130b", dataBatches = 1).orderBy("user_id")
+  }
 
   /** q133: `ListState` on `transformWithState` through the driver gate —
     * the variable-size state shape ([[StatefulOps.RecentValuesProcessor]]:
@@ -1645,28 +1313,15 @@ object StreamingOps extends QueryModule {
     * users with <3 events yield the same NULLs as the oracle's CASE
     * pivot. Scale: one user_id key exchange; k·keys state rows.
     */
-  def q133RecentValuesTws(spark: SparkSession, dir: String): DataFrame =
-    withDrainPartitions(spark) { withRocksDbProvider(spark) {
-      import org.apache.spark.sql.streaming.Trigger
-      val raw = spark.read.parquet(s"$dir/events.parquet").schema
-      val stream0 = spark.readStream.schema(raw)
-        .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-      implicit val enc = org.apache.spark.sql.Encoders.product[Event]
-      val events = normalizeTs(raw, stream0).as[Event]
-      val recent = StatefulOps.recentValuesTws(events, k = 3)
-      val name = s"q133_recent_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = recent.toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      assertSingleDataBatch(q, "q133")
-      spark.table(name)
-        .select(col("user_id"),
-          get(col("vals"), lit(0)).as("v1"),
-          get(col("vals"), lit(1)).as("v2"),
-          get(col("vals"), lit(2)).as("v3"))
-        .orderBy("user_id")
-    }}
+  def q133RecentValuesTws(spark: SparkSession, dir: String): DataFrame = withRocksDbProvider(spark) {
+    val recent = StatefulOps.recentValuesTws(eventStream(spark, dir).as(Encoders.product[Event]), k = 3)
+    drain(spark, recent.toDF(), "update", "q133", dataBatches = 1)
+      .select(col("user_id"),
+        get(col("vals"), lit(0)).as("v1"),
+        get(col("vals"), lit(1)).as("v2"),
+        get(col("vals"), lit(2)).as("v3"))
+      .orderBy("user_id")
+  }
 
   /** q134: `MapState` on `transformWithState` through the driver gate —
     * the keyed-sub-state shape ([[StatefulOps.TypeCountsProcessor]]: a
@@ -1679,23 +1334,11 @@ object StreamingOps extends QueryModule {
     * API. Scale: one user_id key exchange; map entries are point
     * lookups/writes in RocksDB, never a full-map rewrite.
     */
-  def q134TypeCountsTws(spark: SparkSession, dir: String): DataFrame =
-    withDrainPartitions(spark) { withRocksDbProvider(spark) {
-      import org.apache.spark.sql.streaming.Trigger
-      val raw = spark.read.parquet(s"$dir/events.parquet").schema
-      val stream0 = spark.readStream.schema(raw)
-        .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-      implicit val enc = org.apache.spark.sql.Encoders.product[Event]
-      val events = normalizeTs(raw, stream0).as[Event]
-      val counts = StatefulOps.typeCountsTws(events)
-      val name = s"q134_typec_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = counts.toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      assertSingleDataBatch(q, "q134")
-      spark.table(name).orderBy("user_id", "event_type")
-    }}
+  def q134TypeCountsTws(spark: SparkSession, dir: String): DataFrame = withRocksDbProvider(spark) {
+    val counts = StatefulOps.typeCountsTws(eventStream(spark, dir).as(Encoders.product[Event]))
+    drain(spark, counts.toDF(), "update", "q134", dataBatches = 1)
+      .orderBy("user_id", "event_type")
+  }
 
   /** q132: threshold-crossing alerts through the driver gate — the
     * third and last `StatefulOps` operator (q129 timeout close-outs,
@@ -1713,22 +1356,12 @@ object StreamingOps extends QueryModule {
     * plan — one user_id key exchange, 24-byte state rows, emission
     * bounded by the crossing count.
     */
-  def q132BalanceAlerts(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    implicit val enc = org.apache.spark.sql.Encoders.product[Event]
-    val events = normalizeTs(raw, stream0).as[Event]
-    val alerts = StatefulOps.balanceAlerts(events, threshold = 500.0)
-    val name = s"q132_alerts_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = alerts.toDF()
+  def q132BalanceAlerts(spark: SparkSession, dir: String): DataFrame = {
+    val alerts = StatefulOps.balanceAlerts(eventStream(spark, dir).as(Encoders.product[Event]),
+        threshold = 500.0)
+      .toDF()
       .select(col("user_id"), col("n_events"), round(col("balance"), 2).as("balance"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assertSingleDataBatch(q, "q132")
-    spark.table(name).orderBy("user_id")
+    drain(spark, alerts, "append", "q132", dataBatches = 1).orderBy("user_id")
   }
 
   /** q166: STREAMING incremental materialized-view maintenance — q150's
@@ -1755,7 +1388,6 @@ object StreamingOps extends QueryModule {
     * (q150's self-maintenance invariant, streaming edition).
     */
   def q166StreamMvMaintenance(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
     val isDelta = pmod(col("event_id"), lit(5)) === 4
     // `value` is quantized to integer cents INSIDE the MV state: the
     // per-batch merge then accumulates a BIGINT, which is associative
@@ -1769,10 +1401,7 @@ object StreamingOps extends QueryModule {
     var mv = agg(Tables.events(spark, dir)
       .select("event_id", "user_id", "value").filter(!isDelta))
       .localCheckpoint() // at 100 TB: read from the stored MV
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val delta = normalizeTs(raw, stream0)
+    val delta = eventStream(spark, dir)
       .select("event_id", "user_id", "value").filter(isDelta)
     val q = delta.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1811,7 +1440,6 @@ object StreamingOps extends QueryModule {
     * insert-only MV cannot express — are the point.
     */
   def q238StreamCdcApply(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
     val raw = spark.read.parquet(s"$dir/orders.parquet").schema
     val stream0 = spark.readStream.schema(raw)
       .option("basePath", dir).parquet(s"$dir/orders.parque[t]")
@@ -1847,7 +1475,6 @@ object StreamingOps extends QueryModule {
     * later distinct-count read at sketch cost.
     */
   def q240StreamSketchMv(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
     val sk = udaf(new graft.functions.SketchAggregators.HllSketchAggregator(12))
     val mg = udaf(new graft.functions.SketchAggregators.HllMergeAggregator(12))
     val h = conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
@@ -1859,10 +1486,8 @@ object StreamingOps extends QueryModule {
     var mv = sketchOf(
       Tables.events(spark, dir).select("event_id", "user_id", "event_type")
         .filter(!isDelta)).localCheckpoint()
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream0 = spark.readStream.schema(raw)
-      .option("basePath", dir).parquet(s"$dir/events.parque[t]")
-    val delta = stream0.select("event_id", "user_id", "event_type").filter(isDelta)
+    val delta = eventStream(spark, dir)
+      .select("event_id", "user_id", "event_type").filter(isDelta)
     val q = delta.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         mv = mv.as("b").join(sketchOf(batch).as("d"), Seq("event_type"), "full_outer")
@@ -1905,88 +1530,66 @@ object StreamingOps extends QueryModule {
     * partial+final; the sink is batchId-keyed parquet — the idempotent
     * recipe q278 certifies.
     */
-  def q296DimRefreshJoin(spark: SparkSession, dir: String): DataFrame = withDrainPartitions(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("event_type"),
-        floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
-    val cut = lit("2024-01-25").cast("timestamp")
-    val root = java.nio.file.Files.createTempDirectory("q296_dimswap")
-    val streamDir = root.resolve("stream")
-    java.nio.file.Files.createDirectories(streamDir)
-    def emitBatch(df: DataFrame, n: Int): Unit = {
-      val stage = root.resolve(s"stage$n")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-      java.nio.file.Files.move(part, streamDir.resolve(f"b$n%02d.parquet"))
-      streamDir.resolve(f"b$n%02d.parquet").toFile.setLastModified(1000000L * n)
-    }
-    emitBatch(ev.filter(col("ts") < cut), 1)
-    emitBatch(ev.filter(col("ts") >= cut), 2)
-    val dimDir = root.resolve("dim").toString
-    val dimNext = root.resolve("dim_next").toString
-    val types = ev.select("event_type").distinct()
-    types.select(col("event_type"), length(col("event_type")).cast("long").as("rate"))
-      .write.mode("overwrite").parquet(dimDir)
-    types.select(col("event_type"), (length(col("event_type")) * 2).cast("long").as("rate"))
-      .write.mode("overwrite").parquet(dimNext)
-    val outDir = root.resolve("out").toString
-    val schema = spark.read.parquet(streamDir.toString).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString + "/*.parquet")
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val s = df.sparkSession
-        val dimOld = root.resolve("dim_old")
-        // the refresh contract under test: resolve the dim NOW, not at
-        // query construction. foreachBatch is at-least-once: a batch-0
-        // RETRY after the swap landed must still price at v1 — the
-        // pre-swap snapshot lives at dim_old, so a replayed batch 0
-        // resolves it there instead of repricing at v2 (and the swap
-        // below is guarded so the retry cannot throw on a second move).
-        val dimPath =
-          if (id == 0L && java.nio.file.Files.exists(dimOld)) dimOld.toString
-          else {
-            // Crash tolerance: a death BETWEEN the two swap moves below
-            // leaves dim absent and dim_next still staged. Any later
-            // batch completes the interrupted swap before reading, so
-            // retry-idempotency holds across a partial-failure window,
-            // not just a clean replay.
-            if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dimDir)) &&
-              java.nio.file.Files.exists(java.nio.file.Paths.get(dimNext)))
-              java.nio.file.Files.move(java.nio.file.Paths.get(dimNext),
-                java.nio.file.Paths.get(dimDir))
-            dimDir
+  def q296DimRefreshJoin(spark: SparkSession, dir: String): DataFrame =
+    withDrainPartitions(spark) { withReplayRoot("q296") { root =>
+      val ev = Tables.events(spark, dir)
+        .select(col("event_id"), col("ts"), col("event_type"),
+          floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
+      val cut = lit("2024-01-25").cast("timestamp")
+      val stream = replayFiles(root.resolve("stream"),
+        Seq(ev.filter(col("ts") < cut), ev.filter(col("ts") >= cut)))
+      val dimDir = root.resolve("dim")
+      val dimNext = root.resolve("dim_next")
+      val types = ev.select("event_type").distinct()
+      types.select(col("event_type"), length(col("event_type")).cast("long").as("rate"))
+        .write.mode("overwrite").parquet(dimDir.toString)
+      types.select(col("event_type"), (length(col("event_type")) * 2).cast("long").as("rate"))
+        .write.mode("overwrite").parquet(dimNext.toString)
+      val outDir = root.resolve("out").toString
+      val q = stream.writeStream
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          val s = df.sparkSession
+          val dimOld = root.resolve("dim_old")
+          // the refresh contract under test: resolve the dim NOW, not at
+          // query construction. foreachBatch is at-least-once: a batch-0
+          // RETRY after the swap landed must still price at v1 — the
+          // pre-swap snapshot lives at dim_old, so a replayed batch 0
+          // resolves it there instead of repricing at v2 (and the swap
+          // below is guarded so the retry cannot throw on a second move).
+          val dimPath =
+            if (id == 0L && Files.exists(dimOld)) dimOld
+            else {
+              // Crash tolerance: a death BETWEEN the two swap moves below
+              // leaves dim absent and dim_next still staged. Any later
+              // batch completes the interrupted swap before reading, so
+              // retry-idempotency holds across a partial-failure window,
+              // not just a clean replay.
+              if (!Files.exists(dimDir) && Files.exists(dimNext))
+                Files.move(dimNext, dimDir)
+              dimDir
+            }
+          val dim = s.read.parquet(dimPath.toString)
+          df.join(broadcast(dim), "event_type")
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"),
+              sum(col("cents") * col("rate")).as("wc"))
+            .withColumn("batch", lit(id))
+            .write.mode("overwrite").parquet(s"$outDir/b$id")
+          if (id == 0L && !Files.exists(dimOld)) {
+            // nightly refresh lands between batches: swap v2 into place
+            Files.move(dimDir, dimOld)
+            Files.move(dimNext, dimDir)
           }
-        val dim = s.read.parquet(dimPath)
-        df.join(broadcast(dim), "event_type")
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(col("cents") * col("rate")).as("wc"))
-          .withColumn("batch", lit(id))
-          .write.mode("overwrite").parquet(s"$outDir/b$id")
-        if (id == 0L && !java.nio.file.Files.exists(dimOld)) {
-          // nightly refresh lands between batches: swap v2 into place
-          java.nio.file.Files.move(java.nio.file.Paths.get(dimDir), dimOld)
-          java.nio.file.Files.move(java.nio.file.Paths.get(dimNext),
-            java.nio.file.Paths.get(dimDir))
+          ()
         }
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches != 2) throw new IllegalStateException(
-      s"q296 drained in $dataBatches data micro-batches; the swap gate needs exactly 2")
-    finalizeReplay(spark, None, root)(
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      requireDataBatches(q, "q296", 2)
       spark.read.parquet(s"$outDir/b0", s"$outDir/b1")
         .select(col("batch"), col("event_type"), col("n"),
           round(col("wc") / 100.0, 2).as("weighted_value"))
-        .orderBy("batch", "event_type"))
-  }
+        .orderBy("batch", "event_type").localCheckpoint()
+    }}
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q296_dim_refresh_join" -> (q296DimRefreshJoin _),

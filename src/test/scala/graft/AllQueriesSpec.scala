@@ -45,8 +45,16 @@ class AllQueriesSpec extends AnyFunSuite {
         "emit hex(col) / a joined string instead")
   }
 
+  // StreamingOps names each memory sink's temp view `<gate>_<32 hex>`;
+  // a view left behind pins every row its sink emitted in driver memory
+  private val sinkView = "_[0-9a-f]{32}$".r
+  private def sinkViews(): Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+      .filter(sinkView.findFirstIn(_).isDefined).toSet
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows on sf0.001") {
+      val viewsBefore = sinkViews()
       val df = fn(spark, dir)
       // global-window guard: any unpartitioned WindowExec must sit over
       // a census/limit-bounded input (PlanGuards doc) — checked on every
@@ -63,6 +71,10 @@ class AllQueriesSpec extends AnyFunSuite {
         PlanGuards.assertNoSinglePartitionFunnel(df, name)
       val n = df.count()
       assert(n > 0, s"$name returned 0 rows")
+      val leaked = sinkViews() -- viewsBefore
+      assert(leaked.isEmpty, s"$name left memory-sink view(s) ${leaked.mkString(", ")}")
+      assert(spark.streams.active.isEmpty,
+        s"$name left streaming queries running: ${spark.streams.active.map(_.name).mkString(", ")}")
     }
   }
 }

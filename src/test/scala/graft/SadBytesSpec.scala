@@ -50,16 +50,25 @@ class SadBytesSpec extends AnyFunSuite {
   }
 
   test("matches the SQL hex formulation end-to-end on random-ish frames") {
+    // plus the unequal-length case x'00' vs x'0000': the hex formulation
+    // reads an empty substring past the shorter frame and yields NULL, as
+    // must the kernel — once as literals (constant-folded, interpreted
+    // eval) and once computed per row (generated code)
     val df = spark.range(50).selectExpr(
       "id",
       "unhex(substr(repeat(md5(concat('fa', CAST(id AS STRING))), 2), 1, 64)) AS a",
       "unhex(substr(repeat(md5(concat('fb', CAST(id AS STRING))), 2), 1, 64)) AS b")
+      .union(spark.sql("SELECT 50L AS id, x'00' AS a, x'0000' AS b"))
+      .union(spark.range(51, 52).selectExpr("id",
+        "unhex(repeat('00', CAST(id - 50 AS INT))) AS a",
+        "unhex(repeat('00', CAST(id - 49 AS INT))) AS b"))
     val both = df.selectExpr(
       "sad_bytes(a, b) AS native",
       """aggregate(transform(sequence(0, 31), i ->
         |  abs(CAST(conv(substring(hex(a), i * 2 + 1, 2), 16, 10) AS BIGINT) -
         |      CAST(conv(substring(hex(b), i * 2 + 1, 2), 16, 10) AS BIGINT))),
         |0L, (acc, x) -> acc + x) AS hof""".stripMargin).collect()
-    both.foreach(r => assert(r.getLong(0) == r.getLong(1)))
+    both.foreach(r => assert(r.get(0) == r.get(1)))
+    assert(both.count(_.isNullAt(0)) == 2)
   }
 }

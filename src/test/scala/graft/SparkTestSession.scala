@@ -8,11 +8,7 @@ import org.apache.spark.sql.SparkSession
   * startup time on task-thread churn for 6k-row fixtures.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = GraftSession.builder("local[4]", 4).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf0001 = "/root/testdata/sf0.001"
   val sf001  = "/root/testdata/sf0.01"
 }
