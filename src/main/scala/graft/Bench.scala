@@ -28,15 +28,20 @@ import java.nio.file.{Files, Paths}
   * unchanged plan can't masquerade as a regression in the committed
   * contract, while a reproducible slowdown survives and is reported.
   *
-  * Output: ONE JSON line on stdout + the same line at `bench.json` in the
-  * CWD (the driver's stdout parse missed sbt-decorated output in round 1).
+  * Output: ONE JSON line on stdout; a full sweep also writes the same
+  * line to `bench.json` in the CWD, free of sbt's log decoration and
+  * read back as the prior above. A run over named queries leaves
+  * `bench.json` alone, so it never replaces the full-sweep prior.
+  *
+  * Usage: runMain graft.Bench [query...]
   */
 object Bench {
+  /** Fixture directory Bench and Explain read. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     var failed = List.empty[String]
 
     def runOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
@@ -162,7 +167,7 @@ object Bench {
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"t_end":$ts,"sf":"$sfDir","n_failed":${failed.size}}"""
     println(line)
-    Files.writeString(Paths.get("bench.json"), line + "\n")
+    if (args.isEmpty) Files.writeString(Paths.get("bench.json"), line + "\n")
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[bench] failed queries: ${failed.sorted.mkString(", ")}")

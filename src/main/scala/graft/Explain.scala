@@ -1,33 +1,46 @@
 package graft
 
-/** Plan-inspection main: print the formatted physical plan (and
-  * optionally time one materialization) of any `SparkEntry.queries`
-  * entry — the `.explain("formatted")` loop the build methodology
-  * prescribes after every operator lands, packaged so it can run
-  * against any fixture dir.
+/** Plan-inspection main: print the formatted physical plan of each named
+  * `SparkEntry.queries` entry to stdout under a `== <name>` header — the
+  * `.explain("formatted")` check to run after every operator lands, and
+  * what the `plans/` files hold (redirect stdout). One session serves
+  * every query, so the sbt/JVM cost is paid once.
   *
-  * Usage: runMain graft.Explain <queryName> [sfDir] [time]
+  * `final` also runs each query and prints the post-AQE plan after its
+  * formatted plan (ReusedExchange etc. only appear there). Timing is
+  * `graft.Bench <names>`. The fixture is `SPARK_GRAFT_SF_DIR`, defaulting
+  * as Bench does.
+  *
+  * Usage: runMain graft.Explain <query...|all> [final]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val doTime = args.contains("time")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    val df = SparkEntry.queries(name)(spark, dir)
-    println(df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
-    if (doTime) {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      println(f"[explain] $name materialized in ${(System.nanoTime() - t0) / 1e9}%.2f s ($dir)")
+    val showFinal = args.contains("final")
+    val names = args.filterNot(_ == "final").toSeq
+    val requested =
+      if (names == Seq("all")) SparkEntry.queries.keys.toSeq.sorted else names
+    if (requested.isEmpty) {
+      System.err.println("usage: runMain graft.Explain <query...|all> [final]")
+      sys.exit(2)
     }
-    if (args.contains("final")) {
-      // drive the df's own QueryExecution so AQE finalizes, then print
-      // the runtime plan (ReusedExchange etc. only appear here)
-      df.collect()
-      println(df.queryExecution.executedPlan.toString)
+    // reject every unknown name up front — a typo must not abort the
+    // batch mid-run after the JVM/session startup cost is already paid
+    val unknown = requested.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[explain] unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
+    val spark = GraftSession.local()
+    requested.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, Bench.sfDir)
+      println(s"== $name")
+      println(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+      if (showFinal) {
+        // drive the df's own QueryExecution so AQE finalizes
+        df.collect()
+        println(df.queryExecution.executedPlan.toString)
+      }
     }
     spark.stop()
   }

@@ -68,8 +68,10 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
 
-  /** Session for local runs/tests. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Session for local runs/tests, on `SPARK_GRAFT_CPUS` cores when that
+    * is set and on every available core otherwise. */
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
     val spark = builder(s"local[$cores]", math.max(cores, 4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -68,8 +68,7 @@ object ScaleProbe {
     require(factor >= 2, s"factor must be >= 2, got $factor")
     require(Set("suffix", "rotate")(wordMode),
       s"wordmode must be suffix|rotate, got $wordMode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
 
     def reps(df: DataFrame): DataFrame =
       df.withColumn("r", explode(expr(s"sequence(0L, ${factor - 1}L)")))

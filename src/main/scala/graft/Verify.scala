@@ -13,8 +13,7 @@ object Verify {
     // iteration on one query); the driver always passes exactly two args
     // and gets the full sweep.
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     var failed = 0
     SparkEntry.queries

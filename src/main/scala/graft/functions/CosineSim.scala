@@ -214,111 +214,34 @@ case class DotL(left: Expression, right: Expression)
   * and `selectExpr` with full codegen.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSim(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("dot_f"),
-      new ExpressionInfo(classOf[DotF].getName, "dot_f"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "dot_f takes exactly 2 arguments")
-        DotF(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("dot_l"),
-      new ExpressionInfo(classOf[DotL].getName, "dot_l"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "dot_l takes exactly 2 arguments")
-        DotL(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "minhash_sig takes exactly 2 arguments")
-        MinHashSig(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("shingles3"),
-      new ExpressionInfo(classOf[Shingles3].getName, "shingles3"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "shingles3 takes exactly 1 argument")
-        Shingles3(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_mins"),
-      new ExpressionInfo(classOf[WinnowMins].getName, "winnow_mins"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "winnow_mins takes exactly 3 arguments")
-        WinnowMins(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("trigram_hashes"),
-      new ExpressionInfo(classOf[TrigramHashes].getName, "trigram_hashes"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "trigram_hashes takes exactly 1 argument")
-        TrigramHashes(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sad_bytes"),
-      new ExpressionInfo(classOf[SadBytes].getName, "sad_bytes"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "sad_bytes takes exactly 2 arguments")
-        SadBytes(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "sorted_intersect_count takes exactly 2 arguments")
-        SortedIntersectCount(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("gram5_md5"),
-      new ExpressionInfo(classOf[Gram5Md5].getName, "gram5_md5"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "gram5_md5 takes exactly 1 argument")
-        Gram5Md5(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("word_set_count"),
-      new ExpressionInfo(classOf[WordSetCount].getName, "word_set_count"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "word_set_count takes exactly 2 arguments")
-        WordSetCount(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("word_multi_count"),
-      new ExpressionInfo(classOf[WordMultiCount].getName, "word_multi_count"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "word_multi_count takes exactly 2 arguments")
-        WordMultiCount(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("subword_est"),
-      new ExpressionInfo(classOf[SubwordEst].getName, "subword_est"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "subword_est takes exactly 1 argument")
-        SubwordEst(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash62"),
-      new ExpressionInfo(classOf[SimHash62].getName, "simhash62"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "simhash62 takes exactly 1 argument")
-        SimHash62(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "jaro_winkler takes exactly 2 arguments")
-        JaroWinkler(children.head, children(1))
-      }))
-  }
+  /** (SQL name, expression class, arity, constructor over the arguments). */
+  private val functions: Seq[(String, Class[_ <: Expression], Int, Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSim], 2, c => CosineSim(c(0), c(1))),
+    ("dot_f", classOf[DotF], 2, c => DotF(c(0), c(1))),
+    ("dot_l", classOf[DotL], 2, c => DotL(c(0), c(1))),
+    ("minhash_sig", classOf[MinHashSig], 2, c => MinHashSig(c(0), c(1))),
+    ("shingles3", classOf[Shingles3], 1, c => Shingles3(c(0))),
+    ("winnow_mins", classOf[WinnowMins], 3, c => WinnowMins(c(0), c(1), c(2))),
+    ("trigram_hashes", classOf[TrigramHashes], 1, c => TrigramHashes(c(0))),
+    ("sad_bytes", classOf[SadBytes], 2, c => SadBytes(c(0), c(1))),
+    ("sorted_intersect_count", classOf[SortedIntersectCount], 2,
+      c => SortedIntersectCount(c(0), c(1))),
+    ("gram5_md5", classOf[Gram5Md5], 1, c => Gram5Md5(c(0))),
+    ("word_set_count", classOf[WordSetCount], 2, c => WordSetCount(c(0), c(1))),
+    ("word_multi_count", classOf[WordMultiCount], 2, c => WordMultiCount(c(0), c(1))),
+    ("subword_est", classOf[SubwordEst], 1, c => SubwordEst(c(0))),
+    ("simhash62", classOf[SimHash62], 1, c => SimHash62(c(0))),
+    ("jaro_winkler", classOf[JaroWinkler], 2, c => JaroWinkler(c(0), c(1))))
+
+  override def apply(ext: SparkSessionExtensions): Unit =
+    functions.foreach { case (name, cls, arity, build) =>
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.size == arity,
+            s"$name takes exactly $arity argument${if (arity == 1) "" else "s"}")
+          build(children)
+        }))
+    }
 }

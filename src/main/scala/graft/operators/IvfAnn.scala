@@ -84,9 +84,10 @@ object IvfAnn {
     * literal-nprobe oracle mirrors are unchanged; at sf0.1 (32 lists)
     * it derives 2·base, at the sf1 probe (128 lists) 8·base. The
     * recall-vs-nprobe curve AT each geometry is measured by the q229
-    * audit device (`RecallProbe` sweeps it on the larger corpora;
-    * numbers in BASELINE.md) — the fraction-pinned posture is the
-    * measured-safe default, and per-query overrides ride `base`.
+    * audit device (`SimilarityQueries.nprobeCurve`; wide-grid numbers
+    * for the larger corpora in BASELINE.md) — the fraction-pinned
+    * posture is the measured-safe default, and per-query overrides ride
+    * `base`.
     */
   def adaptiveNProbe(spark: SparkSession, dir: String, base: Int = 1): Int =
     math.max(base, base * (adaptiveNLists(spark, dir) / 16))

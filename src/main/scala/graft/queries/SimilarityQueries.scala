@@ -1279,10 +1279,10 @@ object SimilarityQueries extends QueryModule {
     nprobeCurve(spark, dir, Seq(1, 2, 4).map(_ * npf))
   }
 
-  /** The q229 audit device over an ARBITRARY nprobe grid — `RecallProbe`
-    * runs it on the larger corpora (sf0.1's 32 lists, the sf1 probe's
-    * 128) so recall AT each adaptive geometry is measured, not
-    * extrapolated (numbers in BASELINE.md).
+  /** The q229 audit device over an ARBITRARY nprobe grid — run over
+    * wide grids on the larger corpora (sf0.1's 32 lists, the sf1 probe's
+    * 128), it measures recall AT each adaptive geometry instead of
+    * extrapolating it (numbers in BASELINE.md).
     */
   private[graft] def nprobeCurve(spark: SparkSession, dir: String,
       grid: Seq[Int]): DataFrame = {

@@ -85,6 +85,38 @@ object StatefulOps {
   /** One closed idle session per user: event count + last-seen ts. */
   case class SessionClose(user_id: Long, n_events: Long, last_ts: java.sql.Timestamp)
 
+  /** The session split both close-out APIs share: fold one key's batch
+    * (ordered by ts, then event_id) into its open session (`open`, null
+    * when there is none), closing the session whenever the event-time gap
+    * to the next event exceeds `gapMs`. Returns the sessions this batch
+    * closed and the one left open.
+    *
+    * Sessions split on EVENT-TIME gaps inside the handler, not only via
+    * the timeout: a key with new data is invoked with no timeout firing
+    * even when its idle gap already elapsed, so a returning user landing
+    * in the same micro-batch the timeout would have fired in must still
+    * close the stale session here — otherwise session boundaries would
+    * depend on how the stream was chunked into batches.
+    */
+  private def splitSessions(key: Long, open: SessionClose, events: Iterator[Event],
+      gapMs: Long): (List[SessionClose], SessionClose) = {
+    val closed = scala.collection.mutable.ListBuffer.empty[SessionClose]
+    var cur = open
+    events.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+      cur match {
+        case null =>
+          cur = SessionClose(key, 1L, e.ts)
+        case c if e.ts.getTime - c.last_ts.getTime > gapMs =>
+          closed += c
+          cur = SessionClose(key, 1L, e.ts)
+        case c =>
+          cur = SessionClose(key, c.n_events + 1,
+            if (e.ts.after(c.last_ts)) e.ts else c.last_ts)
+      }
+    }
+    (closed.toList, cur)
+  }
+
   /** Idle-session close-out via `GroupStateTimeout.EventTimeTimeout` —
     * the state-EXPIRY shape for arbitrary keyed state (the reference's
     * idle-watchdog semantic, `wsclient.hpp:20-21`, applied to state
@@ -110,29 +142,8 @@ object StatefulOps {
             state.remove()
             Iterator.single(out)
           } else {
-            // Sessions split on EVENT-TIME gaps inside the handler, not
-            // only via the timeout: a key with new data is invoked with
-            // hasTimedOut=false even when its idle gap already elapsed,
-            // so a returning user landing in the same micro-batch the
-            // timeout would have fired in must still close the stale
-            // session here — otherwise session boundaries would depend
-            // on how the stream was chunked into batches.
             val gapMs = gapMinutes * 60000L
-            val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            val closed = scala.collection.mutable.ListBuffer.empty[SessionClose]
-            var cur = state.getOption.orNull
-            evs.foreach { e =>
-              cur match {
-                case null =>
-                  cur = SessionClose(key, 1L, e.ts)
-                case c if e.ts.getTime - c.last_ts.getTime > gapMs =>
-                  closed += c
-                  cur = SessionClose(key, 1L, e.ts)
-                case c =>
-                  cur = SessionClose(key, c.n_events + 1,
-                    if (e.ts.after(c.last_ts)) e.ts else c.last_ts)
-              }
-            }
+            val (closed, cur) = splitSessions(key, state.getOption.orNull, it, gapMs)
             state.update(cur)
             // fully-late rows never reach this function (the stateful
             // operator's watermark predicate drops them first — spec:
@@ -155,8 +166,12 @@ object StatefulOps {
     * snapshot-or-delta semantics as the `mapGroupsWithState` version, so
     * the spec asserts both APIs converge to the identical final state.
     */
-  class RunningBalanceProcessor extends StatefulProcessor[Long, Event, UserRunning] {
-    @transient private var state: org.apache.spark.sql.streaming.ValueState[UserRunning] = _
+  class RunningBalanceProcessor
+      extends StatefulProcessor[Long, Event, UserRunning] with RunningBalanceHandler
+
+  /** The state and input handler both running-balance processors share. */
+  trait RunningBalanceHandler extends StatefulProcessor[Long, Event, UserRunning] {
+    @transient protected var state: org.apache.spark.sql.streaming.ValueState[UserRunning] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       state = getHandle.getValueState[UserRunning](
@@ -196,21 +211,7 @@ object StatefulOps {
         key: Long,
         inputRows: Iterator[Event],
         timerValues: TimerValues): Iterator[SessionClose] = {
-      val evs = inputRows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      val closed = scala.collection.mutable.ListBuffer.empty[SessionClose]
-      var cur = Option(state.get()).orNull
-      evs.foreach { e =>
-        cur match {
-          case null =>
-            cur = SessionClose(key, 1L, e.ts)
-          case c if e.ts.getTime - c.last_ts.getTime > gapMs =>
-            closed += c
-            cur = SessionClose(key, 1L, e.ts)
-          case c =>
-            cur = SessionClose(key, c.n_events + 1,
-              if (e.ts.after(c.last_ts)) e.ts else c.last_ts)
-        }
-      }
+      val (closed, cur) = splitSessions(key, Option(state.get()).orNull, inputRows, gapMs)
       state.update(cur)
       // re-arm: the old API's setTimeoutTimestamp REPLACES the slot;
       // explicit timers accumulate, so drop the stale ones first
@@ -337,28 +338,13 @@ object StatefulOps {
     * snapshot, per key, under chunking.
     */
   class RunningBalanceProcessorWithInit
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[Long, Event, UserRunning, UserRunning] {
-    @transient private var state: org.apache.spark.sql.streaming.ValueState[UserRunning] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[UserRunning](
-        "running", Encoders.product[UserRunning], org.apache.spark.sql.streaming.TTLConfig.NONE)
-
+      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[Long, Event, UserRunning, UserRunning]
+      with RunningBalanceHandler {
     override def handleInitialState(
         key: Long,
         initialState: UserRunning,
         timerValues: TimerValues): Unit =
       state.update(initialState)
-
-    override def handleInputRows(
-        key: Long,
-        inputRows: Iterator[Event],
-        timerValues: TimerValues): Iterator[UserRunning] = {
-      val prev = Option(state.get()).getOrElse(UserRunning(key, 0L, 0.0))
-      val next = fold(prev, inputRows)
-      state.update(next)
-      Iterator.single(next)
-    }
   }
 
   /** `runningBalanceTws` bootstrapped from a snapshot Dataset (requires

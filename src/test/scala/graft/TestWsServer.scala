@@ -93,6 +93,7 @@ final class TestWsServer {
           case 0x8 => // close: echo and bail
             sendRaw(0x8, payload); return
           case 0x9 => if (!muted) sendRaw(0xA, payload) // ping -> pong
+          case 0xA => synchronized { pongs += 1; notifyAll() }
           case _ => ()
         }
       }
@@ -111,6 +112,23 @@ final class TestWsServer {
 
   /** Push a text frame to the connected client. */
   def send(msg: String): Unit = sendRaw(0x1, msg.getBytes(UTF_8))
+
+  /** pongs received for `roundTrip` pings */
+  private var pongs = 0
+
+  /** Ping the client and wait for its pong. The client answers pings in
+    * frame order, after handing every earlier text frame to its listener,
+    * so a completed round trip means all frames sent before it have been
+    * delivered (recorded or shed) on the client side.
+    */
+  def roundTrip(timeoutMs: Long = 10000): Boolean = synchronized {
+    val target = pongs + 1
+    sendRaw(0x9, Array.emptyByteArray)
+    val deadline = System.currentTimeMillis() + timeoutMs
+    while (pongs < target && System.currentTimeMillis() < deadline)
+      wait(math.max(1L, deadline - System.currentTimeMillis()))
+    pongs >= target
+  }
 
   /** While muted the server reads frames but answers NOTHING — no pongs,
     * no data: the half-open/unresponsive-peer scenario only a client-side

@@ -280,6 +280,40 @@ class WebSocketSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("maxBufferRows sheds frames past the bound; later frames take the next contiguous offsets (protocol-level)") {
+    // a slow consumer must not grow the source's buffer without limit:
+    // frames past `maxBufferRows` uncommitted rows are dropped at receipt,
+    // and once a commit frees room the offsets continue without a gap
+    import graft.sources.websocket.{WebSocketMicroBatchStream, WsInputPartition, WsOffset}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val server = new TestWsServer
+    val stream = new WebSocketMicroBatchStream(new CaseInsensitiveStringMap(
+      java.util.Map.of("url", server.url, "key", "websocket_1",
+        "reconnectDelayMs", "200", "connectTimeoutMs", "2000",
+        "maxBufferRows", "5")))
+    def rows(start: WsOffset, end: WsOffset): Seq[String] =
+      stream.planInputPartitions(start, end).toSeq
+        .flatMap(_.asInstanceOf[WsInputPartition].rows).map(_._1)
+    try {
+      assert(eventually()(server.totalConnects >= 1), "source never connected")
+      val start = stream.initialOffset().asInstanceOf[WsOffset]
+      (1 to 8).foreach(i => server.send(s"frame-$i"))
+      assert(server.roundTrip(), "client never answered the ping")
+      val full = stream.latestOffset().asInstanceOf[WsOffset]
+      assert(full.n == 5L, s"buffer grew past maxBufferRows: latest offset ${full.n}")
+      assert(rows(start, full) == (1 to 5).map(i => s"frame-$i"))
+      stream.commit(full)
+      (9 to 10).foreach(i => server.send(s"frame-$i"))
+      assert(server.roundTrip(), "client never answered the ping")
+      val next = stream.latestOffset().asInstanceOf[WsOffset]
+      assert(next.n == 7L, s"frames after the commit should take offsets 5-6, latest is ${next.n}")
+      assert(rows(full, next) == Seq("frame-9", "frame-10"))
+    } finally {
+      stream.stop()
+      server.close()
+    }
+  }
+
   test("interval messages are re-sent on a fixed cadence") {
     val server = new TestWsServer
     try {
