@@ -1,6 +1,7 @@
 package graft.sources.kafkashape
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BinaryType, StringType}
@@ -21,7 +22,10 @@ import org.apache.spark.sql.types.{BinaryType, StringType}
   *    uniformly at random across partitions (librdkafka's
   *    unassigned-partition behavior), never pile onto the constant
   *    hash-of-null partition;
-  *  - output laid out per topic (directory per topic, like a topic log).
+  *  - output laid out per topic and epoch
+  *    (`topic=<t>/epoch=<n>/`, like a topic log): a fixed topic writes
+  *    each epoch straight into its directory, a `topic` column goes
+  *    through a dynamic partition overwrite (see `writeEpoch`).
   *
   * The transport is parquet-on-disk rather than a broker (no Kafka
   * broker nor client jars exist in this environment); everything ABOVE
@@ -50,51 +54,75 @@ object KafkaShapedSink {
   /** Start the sink on a streaming frame. Records land under
     * `$path/topic=<topic>/epoch=<n>/` as parquet with
     * (key, value, partition, ts).
+    *
+    * A fixed `topic` overrides any `topic` column, as in Spark's Kafka
+    * sink: the column is dropped and every epoch takes `writeEpoch`'s
+    * fixed-topic route. Without it, the per-row `topic` column routes
+    * each record. `outputMode` is passed to `DataStreamWriter.outputMode`
+    * (`update` for stateful output such as `OrderBook.topOfBook`).
     */
   def start(
       df: DataFrame,
       path: String,
       checkpoint: String,
       topic: Option[String] = None,
-      numPartitions: Int = 8): StreamingQuery = {
+      numPartitions: Int = 8,
+      outputMode: String = "append"): StreamingQuery = {
     validate(df, topic)
-    val withTopic =
-      if (df.schema.fieldNames.contains("topic")) df
-      else df.withColumn("topic", lit(topic.get))
     val keyed =
-      if (withTopic.schema.fieldNames.contains("key")) withTopic
-      else withTopic.withColumn("key", lit(null).cast(StringType))
+      if (df.schema.fieldNames.contains("key")) df
+      else df.withColumn("key", lit(null).cast(StringType))
     keyed.writeStream
+      .outputMode(outputMode)
       .trigger(Trigger.ProcessingTime(0L))
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        writeEpoch(batch, epochId, path, numPartitions)
+        writeEpoch(batch, epochId, path, numPartitions, topic)
       }
       .start()
   }
 
   /** One epoch's delivery, IDEMPOTENT on replay: foreachBatch re-runs the
     * last epoch when a crash lands between the sink write and the commit
-    * log; a plain append would double-deliver it. Dynamic partition
-    * overwrite scoped to (topic, epoch) makes the retry rewrite exactly
-    * its own partition — Spark's file-sink route to the exactly-once
-    * upgrade over the reference's fire-and-forget delivery
-    * (`kafka_producer.cpp:54-56` logs-and-drops; a real Kafka transport
-    * would instead use transactional producer semantics).
+    * log; a plain append would double-deliver it. The retry rewrites
+    * exactly its own `topic=<t>/epoch=<n>/` directory — Spark's file-sink
+    * route to the exactly-once upgrade over the reference's
+    * fire-and-forget delivery (`kafka_producer.cpp:54-56` logs-and-drops;
+    * a real Kafka transport would instead use transactional producer
+    * semantics). Two routes:
+    *
+    *  - `topic = Some(t)`: a plain overwrite of that one directory, its
+    *    name escaped as `partitionBy` escapes it (any `topic` column is
+    *    dropped). No sort, no dynamic-partition writer, no
+    *    `.spark-staging` directory and no partition rename. An epoch with no rows leaves one 0-row file there
+    *    (Spark writes a schema-only file for a non-partitioned write);
+    *    readers see 0 rows either way.
+    *  - `topic = None`: per-row topics from the `topic` column, written
+    *    by a dynamic partition overwrite on (topic, epoch), which
+    *    replaces only the partitions present in the batch. An empty epoch
+    *    leaves no directory.
     */
   private[graft] def writeEpoch(
-      batch: DataFrame, epochId: Long, path: String, numPartitions: Int): Unit =
-    batch
+      batch: DataFrame, epochId: Long, path: String, numPartitions: Int,
+      topic: Option[String] = None): Unit = {
+    val records = batch
       .withColumn("partition",
         when(col("key").isNull,
           floor(rand() * numPartitions).cast("int"))
           .otherwise(pmod(hash(col("key")), lit(numPartitions))))
       .withColumn("ts", recordTimestamp())
-      .withColumn("epoch", lit(epochId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("topic", "epoch")
-      .parquet(path)
+    topic match {
+      case Some(t) =>
+        records.drop("topic").write.mode("overwrite")
+          .parquet(s"$path/topic=${escapePathName(t)}/epoch=$epochId")
+      case None =>
+        records.withColumn("epoch", lit(epochId))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("topic", "epoch")
+          .parquet(path)
+    }
+  }
 
   /** Producer-assigned epoch-millis, evaluated once PER RECORD on the
     * executor at write time — `current_timestamp()` folds to one value

@@ -1,6 +1,7 @@
 package graft
 
-import graft.streaming.{Book, BookUpdate, OrderBook}
+import graft.sources.kafkashape.KafkaShapedSink
+import graft.streaming.{Book, BookUpdate, OrderBook, TopOfBook}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -58,6 +59,33 @@ class OrderBookSpec extends AnyFunSuite {
       val got = runChunked(script, n)
       assert(got == want, s"diverged at $n chunks")
     }
+  }
+
+  test("top-of-book through KafkaShapedSink.start in update mode ends equal to the batch reference") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, from_json, struct, to_json}
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = java.nio.file.Files.createTempDirectory("book_sink_out").toString
+    val chk = java.nio.file.Files.createTempDirectory("book_sink_chk").toString
+    val mem = MemoryStream[BookUpdate]
+    val tops = OrderBook.topOfBook(mem.toDS()).toDF()
+    val records = tops.select(col("market").as("key"),
+      to_json(struct(tops.columns.map(col).toIndexedSeq: _*)).as("value"))
+    val q = KafkaShapedSink.start(records, outDir, chk, topic = Some("tops"),
+      numPartitions = 4, outputMode = "update")
+    try script.grouped(5).foreach { c => mem.addData(c); q.processAllAvailable() }
+    finally q.stop()
+    val schema = org.apache.spark.sql.Encoders.product[TopOfBook].schema
+    // the latest epoch's row per market is its final top-of-book
+    val got = spark.read.parquet(outDir)
+      .select(col("key"), col("epoch").cast("long").as("epoch"), from_json(col("value"), schema).as("t"))
+      .collect().groupBy(_.getString(0))
+      .map { case (m, rows) =>
+        val t = rows.maxBy(_.getAs[Long]("epoch")).getStruct(2)
+        m -> TopOfBook(t.getString(0), t.getLong(1), t.getDouble(2), t.getDouble(3),
+          t.getInt(4), t.getInt(5))
+      }
+    assert(got == OrderBook.batchReference(script))
   }
 
   test("final book state is exactly right after the snapshot resync") {

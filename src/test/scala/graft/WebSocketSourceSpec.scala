@@ -488,6 +488,100 @@ class WebSocketSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(epochDirs == Seq("epoch=0"), s"duplicate epoch dirs: $epochDirs")
   }
 
+  test("fixed-topic sink epoch writes are idempotent: a replayed epoch never double-delivers") {
+    // the fixed-topic twin of the test above: the epoch is written straight
+    // into topic=t/epoch=<n>/, and overwriting that directory must make
+    // the retry a no-op while new epochs still accumulate.
+    import spark.implicits._
+    val outDir = Files.createTempDirectory("idem_fixed_out").toString
+    val batch = (1 to 10).map(i => ("k", s"v$i")).toDF("key", "value")
+    KafkaShapedSink.writeEpoch(batch, 0L, outDir, 4, Some("t"))
+    KafkaShapedSink.writeEpoch(batch, 0L, outDir, 4, Some("t")) // replay
+    assert(spark.read.parquet(outDir).count() == 10,
+      "replayed epoch double-delivered")
+    KafkaShapedSink.writeEpoch(batch, 1L, outDir, 4, Some("t"))
+    val all = spark.read.parquet(outDir)
+    assert(all.count() == 20, "second epoch lost or merged")
+    assert(all.select("epoch").distinct().count() == 2)
+  }
+
+  test("fixed-topic sink epoch replay with CHANGED content is last-writer-wins, scoped to its epoch directory") {
+    // the fixed-topic twin of the test above: the replay replaces its own
+    // epoch directory wholesale, and neither another epoch of the same
+    // topic nor another topic's same-numbered epoch is touched.
+    import spark.implicits._
+    val outDir = Files.createTempDirectory("replay_fixed_out").toString
+    val first = (1 to 10).map(i => ("k", s"a$i")).toDF("key", "value")
+    val later = (1 to 3).map(i => ("k", s"c$i")).toDF("key", "value")
+    val other = (1 to 5).map(i => ("k", s"u$i")).toDF("key", "value")
+    val changed = (1 to 7).map(i => ("k2", s"b$i")).toDF("key", "value")
+    KafkaShapedSink.writeEpoch(first, 0L, outDir, 4, Some("t"))
+    KafkaShapedSink.writeEpoch(later, 1L, outDir, 4, Some("t"))
+    KafkaShapedSink.writeEpoch(other, 0L, outDir, 4, Some("u"))
+    KafkaShapedSink.writeEpoch(changed, 0L, outDir, 4, Some("t"))
+    val t0 = spark.read.parquet(outDir).filter(col("topic") === "t" && col("epoch") === 0)
+    val values = t0.select("value").collect().map(_.getString(0)).toSet
+    assert(values == (1 to 7).map(i => s"b$i").toSet && t0.count() == 7,
+      s"changed replay did not fully replace the first delivery: $values")
+    val t1 = spark.read.parquet(outDir).filter(col("topic") === "t" && col("epoch") === 1)
+    assert(t1.select("value").collect().map(_.getString(0)).toSet ==
+      (1 to 3).map(i => s"c$i").toSet, "a replay of epoch 0 touched epoch 1")
+    assert(spark.read.parquet(outDir).filter(col("topic") === "u").count() == 5,
+      "a replay on topic t clobbered topic u's epoch")
+    val epochDirs = new java.io.File(s"$outDir/topic=t").listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted.toSeq
+    assert(epochDirs == Seq("epoch=0", "epoch=1"), s"duplicate epoch dirs: $epochDirs")
+  }
+
+  test("a fixed topic overrides a topic column (Spark's Kafka sink contract)") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = Files.createTempDirectory("override_out").toString
+    val chk = Files.createTempDirectory("override_chk").toString
+    val mem = MemoryStream[String]
+    val df = mem.toDF().select(col("value").as("key"), col("value"), lit("x").as("topic"))
+    val q = KafkaShapedSink.start(df, outDir, chk, topic = Some("t"), numPartitions = 4)
+    try {
+      mem.addData((1 to 6).map(i => s"v$i"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val topicDirs = new java.io.File(outDir).listFiles()
+      .filter(_.isDirectory).map(_.getName).toSeq
+    assert(topicDirs == Seq("topic=t"), s"records left the fixed topic: $topicDirs")
+    val out = spark.read.parquet(outDir)
+    assert(out.count() == 6)
+    assert(out.select("topic").distinct().collect().map(_.getString(0)).toSeq == Seq("t"))
+  }
+
+  test("a fixed topic's directory name is escaped exactly as the topic-column route escapes it") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val topic = "a/b=c d"
+    val fixedDir = Files.createTempDirectory("escape_fixed_out").toString
+    val columnDir = Files.createTempDirectory("escape_column_out").toString
+    val chk = Files.createTempDirectory("escape_chk").toString
+    val mem = MemoryStream[String]
+    val q = KafkaShapedSink.start(mem.toDF().select(col("value").as("key"), col("value")),
+      fixedDir, chk, topic = Some(topic), numPartitions = 4)
+    try {
+      mem.addData(Seq("v1", "v2"))
+      q.processAllAvailable()
+    } finally q.stop()
+    KafkaShapedSink.writeEpoch(
+      Seq(("v1", "v1", topic)).toDF("key", "value", "topic"), 0L, columnDir, 4)
+    def dirs(root: String) = new java.io.File(root).listFiles()
+      .filter(_.isDirectory).map(_.getName).toSeq
+    assert(dirs(fixedDir).length == 1 && dirs(fixedDir) == dirs(columnDir),
+      s"fixed-topic dirs ${dirs(fixedDir)} vs topic-column dirs ${dirs(columnDir)}")
+    for (root <- Seq(fixedDir, columnDir)) {
+      val topics = spark.read.parquet(root).select("topic").distinct()
+        .collect().map(_.getString(0)).toSeq
+      assert(topics == Seq(topic), s"$root read back topics $topics")
+    }
+  }
+
   test("kafka-shaped SOURCE streams the sink's topic log back: round trip + incremental epochs + topic pruning") {
     // the §2B "Kafka source" row in shape: the sink's parquet-per-topic
     // log read back as a stream with the Kafka record model — new epoch
