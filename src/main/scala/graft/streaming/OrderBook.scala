@@ -89,6 +89,8 @@ object OrderBook {
     * the seq-sort still assumes one numbering epoch; a regression that
     * collides with old-epoch deltas inside the SAME micro-batch
     * converges at the next snapshot — the protocol's own guarantee.)
+    * A delta whose side is neither "bid" nor "ask" is left unapplied:
+    * the book, `n_updates` and `max_seq` stay as they were.
     */
   def fold(prev: Book, updates: Iterator[BookUpdate]): Book =
     updates.toSeq.sortBy(_.seq).foldLeft(prev) { (b, u) =>
@@ -97,8 +99,11 @@ object OrderBook {
       else {
         def upd(m: Map[Double, Double]): Map[Double, Double] =
           if (u.size == 0.0) m - u.price else m.updated(u.price, u.size)
-        if (u.side == "bid") Book(u.market, b.n_updates + 1, upd(b.bids), b.asks, u.seq)
-        else Book(u.market, b.n_updates + 1, b.bids, upd(b.asks), u.seq)
+        u.side match {
+          case "bid" => Book(u.market, b.n_updates + 1, upd(b.bids), b.asks, u.seq)
+          case "ask" => Book(u.market, b.n_updates + 1, b.bids, upd(b.asks), u.seq)
+          case _ => b // unknown side: neither book side is touched
+        }
       }
     }
 

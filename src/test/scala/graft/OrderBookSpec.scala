@@ -291,4 +291,11 @@ class OrderBookSpec extends AnyFunSuite {
     assert(twice.bids == once.bids && twice.asks == once.asks && twice.max_seq == once.max_seq,
       s"replayed snapshot corrupted the book: $twice vs $once")
   }
+
+  test("a delta with an unknown side is left unapplied") {
+    val book = OrderBook.fold(Book.empty("BTC"), script.filter(_.market == "BTC").iterator)
+    val unknown = mk(17, "BTC", "BUY", 102.0, 1.0)
+    assert(OrderBook.fold(book, Iterator(unknown)) == book)
+    assert(OrderBook.batchReference(script :+ unknown) == OrderBook.batchReference(script))
+  }
 }
