@@ -10,28 +10,26 @@ import java.nio.file.{Files, Paths}
   * per-query numbers swung 3× between identical runs):
   *  - one UNTIMED warmup pass of the flagship query primes the JVM, the
   *    parquet footer caches, and the codegen compiler;
-  *  - each query then runs 3 times (2 when the first rep shows it is
-  *    slow) and reports the MIN. Noise on a warm single-node run —
-  *    GC pauses, C2 recompiles, scheduler contention — is strictly
-  *    ADDITIVE, so the minimum is the consistent estimator of plan
-  *    cost; the round-8 audit showed medians still swinging 2–5× on
-  *    C2-sensitive queries across byte-identical rounds, which is
-  *    exactly the false alarm the committed artifact must not raise.
+  *  - each query then runs `SPARK_GRAFT_BENCH_REPS` times (default 3;
+  *    2 when the first rep takes over 5 s) and reports the MIN. Noise
+  *    on a warm single-node run — GC pauses, C2 recompiles, scheduler
+  *    contention — is strictly ADDITIVE, so the minimum is the
+  *    consistent estimator of plan cost; the round-8 audit showed
+  *    medians still swinging 2–5× on C2-sensitive queries across
+  *    byte-identical rounds, which is exactly the false alarm the
+  *    committed artifact must not raise.
   *
   * Failures are loud: a crashing query reports a negative time and the
   * process exits nonzero, so a regression can never hide inside a
   * plausible-looking wall time (round-1 lesson).
   *
-  * Self-stabilizing against transient host load (round-16 lesson): rows
-  * landing >2× their committed `bench.json` prior get up to two extra
-  * reps before the artifact is written, so an external-load spike on an
-  * unchanged plan can't masquerade as a regression in the committed
-  * contract, while a reproducible slowdown survives and is reported.
+  * The rule reads nothing but this run: the rep count and the reported
+  * minimum depend only on the code, the fixture and the core count,
+  * whatever directory Bench runs in.
   *
   * Output: ONE JSON line on stdout; a full sweep also writes the same
-  * line to `bench.json` in the CWD, free of sbt's log decoration and
-  * read back as the prior above. A run over named queries leaves
-  * `bench.json` alone, so it never replaces the full-sweep prior.
+  * line to `bench.json` in the CWD, free of sbt's log decoration. A run
+  * over named queries leaves `bench.json` alone.
   *
   * Usage: runMain graft.Bench [query...]
   */
@@ -41,6 +39,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val unknown = SparkEntry.unknownQueries(args.toSeq)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[bench] unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val spark = GraftSession.local()
     var failed = List.empty[String]
 
@@ -87,34 +90,6 @@ object Bench {
     // Additive noise means min, not median, is the stable statistic.
     val repeatBelowSec = 5.0
 
-    // Committed prior (`bench.json` in the CWD, when present): the
-    // stable round-over-round contract this sweep is diffed against.
-    // Any row whose min still exceeds 2× its prior gets up to two
-    // EXTRA reps before the artifact is written — transient host load
-    // (round-16 audit: q42 at 5.45 s vs a 1.33 s prior on a
-    // byte-identical plan) is additive and rarely survives more
-    // samples, while a real regression reproduces under every rep and
-    // stays in the artifact. Sub-second rows are exempt (0.5 s floor:
-    // 2× of nothing is jitter, not load).
-    val prior: Map[String, Double] =
-      try {
-        val txt = Files.readString(Paths.get("bench.json"))
-        val m = """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
-        val inQueries = txt.indexOf("\"queries\":")
-        if (inQueries < 0) Map.empty
-        else {
-          // bound the scan to the queries object (flat, no nested
-          // braces) so trailing numeric fields like "n_failed":0 can
-          // never collide with a future query name
-          val end = txt.indexOf('}', inQueries)
-          val span = if (end < 0) txt.substring(inQueries)
-                     else txt.substring(inQueries, end + 1)
-          m.findAllMatchIn(span)
-            .map(mm => mm.group(1) -> mm.group(2).toDouble).toMap
-        }
-      } catch { case _: Throwable => Map.empty[String, Double] }
-    val stabilizeExtraReps = 2
-
     // optional args = subset of query names (iteration aid; the driver
     // passes none and measures everything)
     val selected =
@@ -125,31 +100,16 @@ object Bench {
       val times =
         try {
           val first = rep()
-          if (first > repeatBelowSec) Seq(first, rep()).sorted
-          else (Seq(first) ++ Seq.fill(reps - 1)(rep())).sorted
+          if (first > repeatBelowSec) Seq(first, rep())
+          else first +: Seq.fill(reps - 1)(rep())
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           failed ::= name
           dropSweepState()
           Seq.empty[Double]
         }
-      var sec = if (times.isEmpty) -1.0 else times.head // min (times sorted)
-      var nReps = times.size
-      prior.get(name).filter(p => p > 0 && sec >= 0).foreach { p =>
-        var extra = 0
-        while (sec > 2 * p && sec > 0.5 && extra < stabilizeExtraReps) {
-          // a crashed stabilize rep must still drop sweep state (rep()
-          // only drops it after a successful runOnce) or its leftover
-          // blocks contaminate every later query's timings
-          val t = try rep()
-            catch { case _: Throwable => dropSweepState(); -1.0 }
-          extra += 1
-          if (t >= 0) { nReps += 1; if (t < sec) sec = t }
-          else extra = stabilizeExtraReps // rep crashed mid-stabilize: keep the valid min
-        }
-        if (sec > 2 * p && sec > 0.5) System.err.println(
-          f"[bench] $name: $sec%.2f s holds at >2x committed prior ($p%.2f s) after $extra extra rep(s) — likely real")
-      }
+      val sec = if (times.isEmpty) -1.0 else times.min
+      val nReps = times.size
       System.err.println(f"[bench] $name%-28s $sec%8.2f s ($nReps reps)")
       // wall-clock stamp (epoch seconds) at the END of this query's
       // measurement: a contiguous block of inflated rows in a sweep is

@@ -23,9 +23,7 @@ object Explain {
       System.err.println("usage: runMain graft.Explain <query...|all> [final]")
       sys.exit(2)
     }
-    // reject every unknown name up front — a typo must not abort the
-    // batch mid-run after the JVM/session startup cost is already paid
-    val unknown = requested.filterNot(SparkEntry.queries.contains)
+    val unknown = SparkEntry.unknownQueries(requested)
     if (unknown.nonEmpty) {
       System.err.println(s"[explain] unknown queries: ${unknown.mkString(", ")}")
       sys.exit(2)

@@ -48,6 +48,13 @@ object SparkEntry {
     all.toMap
   }
 
+  /** The names in `requested` that are not `queries` keys, in order.
+    * Bench, Verify and Explain reject them before a session starts, so a
+    * typo neither times nothing nor aborts a batch after startup.
+    */
+  def unknownQueries(requested: Seq[String]): Seq[String] =
+    requested.filterNot(queries.contains)
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -12,12 +12,17 @@ object Verify {
     // Optional trailing names restrict the dump (builder-side fast
     // iteration on one query); the driver always passes exactly two args
     // and gets the full sweep.
-    val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
+    val (sfDir, outDir, names) = (args(0), args(1), args.drop(2).toSeq)
+    val unknown = SparkEntry.unknownQueries(names)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     var failed = 0
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => names.isEmpty || names.contains(name) }
       .foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)

@@ -26,11 +26,4 @@ object VectorOps {
 
   /** Cosine similarity of two float-array columns. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Cosine given pre-computed norms — at scale, norms are computed once
-    * per row on each join side (O(n·d)), never per candidate pair
-    * (O(pairs·d)); only the dot product is per-pair.
-    */
-  def cosinePrenormed(a: Column, b: Column, normA: Column, normB: Column): Column =
-    dot(a, b) / (normA * normB)
 }

@@ -1079,25 +1079,13 @@ object SimilarityQueries extends QueryModule {
       .orderBy("n_common")
   }
 
-  /** q255: RETRIEVAL nDCG@5 — the rank-aware retrieval metric that
-    * completes the eval family (q215 recall@5 counts overlap, q229
-    * sweeps it over nprobe; nDCG grades WHERE the hits land, Järvelin &
-    * Kekäläinen '02): per q215 anchor, the IVF ranking at the
-    * production probe point (`adaptiveNProbe` lists; 1 on the oracle
-    * corpus) is scored against the brute-force ground truth with graded relevance
-    * rel = 6 − true_rank (0 if outside the true top-5), DCG summed with
-    * the standard 1/log₂(i+1) discount.
-    *
-    * Determinism: both rankings use q215's exact BIGINT dot products
-    * with (cos desc, id asc) tie order; the DCG/IDCG sums are FIXED
-    * 5-term association chains over per-rank integer grades pivoted
-    * into columns (never an unordered float aggregate), with the log₂
-    * constants embedded as identical literals in both engines; the
-    * corpus mean rides the ⌊ndcg·10⁶+0.5⌋ integer grid so it is
-    * order-invariant. Scale: q215's — anchors broadcast (37× reduction),
-    * candidate scan + bounded heaps, per-anchor census thereafter.
+  /** The q215 anchors (`a_id`) with their brute-force top-5 (`exact`,
+    * rank 1–5 in `r_ex`) and their IVF top-5 at the production probe
+    * point (`approx`, rank in `r_ap`): the ranking pair q255 and q317
+    * score. Both rankings use q215's exact BIGINT dot products with
+    * (cos desc, id asc) tie order.
     */
-  def q255RetrievalNdcg(spark: SparkSession, dir: String): DataFrame = {
+  private def rankedTop5(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val gi = gridIvfProd(spark, dir)
     val anchors = gi.assigned.filter(col("vec_id") % 37 === 0)
       .select(col("vec_id").as("a_id"),
@@ -1121,6 +1109,29 @@ object SimilarityQueries extends QueryModule {
       .join(broadcast(aprobes), Seq("c_list"))
       .join(broadcast(anchors), Seq("a_id"))
       .filter(col("c_id") =!= col("a_id")), "r_ap")
+    (anchors, exact, approx)
+  }
+
+  /** q255: RETRIEVAL nDCG@5 — the rank-aware retrieval metric that
+    * completes the eval family (q215 recall@5 counts overlap, q229
+    * sweeps it over nprobe; nDCG grades WHERE the hits land, Järvelin &
+    * Kekäläinen '02): per q215 anchor, the IVF ranking at the
+    * production probe point (`adaptiveNProbe` lists; 1 on the oracle
+    * corpus) is scored against the brute-force ground truth with graded relevance
+    * rel = 6 − true_rank (0 if outside the true top-5), DCG summed with
+    * the standard 1/log₂(i+1) discount.
+    *
+    * Determinism: both rankings use q215's exact BIGINT dot products
+    * with (cos desc, id asc) tie order; the DCG/IDCG sums are FIXED
+    * 5-term association chains over per-rank integer grades pivoted
+    * into columns (never an unordered float aggregate), with the log₂
+    * constants embedded as identical literals in both engines; the
+    * corpus mean rides the ⌊ndcg·10⁶+0.5⌋ integer grid so it is
+    * order-invariant. Scale: q215's — anchors broadcast (37× reduction),
+    * candidate scan + bounded heaps, per-anchor census thereafter.
+    */
+  def q255RetrievalNdcg(spark: SparkSession, dir: String): DataFrame = {
+    val (anchors, exact, approx) = rankedTop5(spark, dir)
     val graded = approx.join(exact, Seq("a_id", "c_id"), "left")
       .withColumn("rel", coalesce(lit(6L) - col("r_ex"), lit(0L)))
     val gAgg = graded.groupBy("a_id").agg(
@@ -1178,29 +1189,7 @@ object SimilarityQueries extends QueryModule {
     * census-sized arithmetic only.
     */
   def q317RetrievalMrr(spark: SparkSession, dir: String): DataFrame = {
-    val gi = gridIvfProd(spark, dir)
-    val anchors = gi.assigned.filter(col("vec_id") % 37 === 0)
-      .select(col("vec_id").as("a_id"),
-        col("qe").as("a_qe"), col("qn").as("a_qn"))
-    val cands = gi.assigned.select(col("vec_id").as("c_id"),
-      col("list_id").as("c_list"), col("qe").as("c_qe"), col("qn").as("c_qn"))
-    val aprobes = gi.probes.filter(col("vec_id") % 37 === 0)
-      .select(col("vec_id").as("a_id"), col("list_id").as("c_list"))
-    val topk = udaf(new graft.functions.SketchAggregators.TopKAggregator(5))
-    def top5Ranked(pairs: DataFrame, rankName: String): DataFrame = pairs
-      .withColumn("qdot", expr("dot_l(a_qe, c_qe)"))
-      .withColumn("cos", col("qdot").cast("double") /
-        (sqrt(col("a_qn").cast("double")) * sqrt(col("c_qn").cast("double"))))
-      .groupBy("a_id").agg(topk(col("cos"), col("c_id")).as("top"))
-      .select(col("a_id"), posexplode(col("top")))
-      .select(col("a_id"), col("col.id").as("c_id"),
-        (col("pos") + 1).cast("long").as(rankName))
-    val exact = top5Ranked(
-      cands.join(broadcast(anchors), col("c_id") =!= col("a_id")), "r_ex")
-    val approx = top5Ranked(cands
-      .join(broadcast(aprobes), Seq("c_list"))
-      .join(broadcast(anchors), Seq("a_id"))
-      .filter(col("c_id") =!= col("a_id")), "r_ap")
+    val (anchors, exact, approx) = rankedTop5(spark, dir)
     val perA = anchors.select(col("a_id"))
       .join(approx.join(exact, Seq("a_id", "c_id"), "left")
         .groupBy("a_id").agg(

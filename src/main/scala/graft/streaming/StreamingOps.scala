@@ -255,24 +255,10 @@ object StreamingOps extends QueryModule {
     * (no watermark or no time bound) refuses to run in append mode —
     * Spark's analyzer enforces what the reference could only hope for.
     */
-  def clickAttribution(events: DataFrame): DataFrame = {
-    val clicks = events
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    purchases.join(clicks,
-      col("user_id") === col("click_user") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 6 HOURS") &&
-        col("click_ts") <= col("purchase_ts"))
+  def clickAttribution(events: DataFrame): DataFrame =
+    clickPurchaseJoin(events, "inner")
       .select(col("purchase_id"), col("click_id"), col("user_id"),
         col("click_ts"), col("purchase_ts"))
-  }
 
   /** LEFT SEMI variant of [[clickAttribution]]: each attributed purchase
     * emits exactly ONCE, however many qualifying clicks exist — the
@@ -282,23 +268,8 @@ object StreamingOps extends QueryModule {
     * 1-hour watermark still bounds the click buffer. Batch: a plain
     * left-semi interval join.
     */
-  def clickAttributionSemi(events: DataFrame): DataFrame = {
-    val clicks = events
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    purchases.join(clicks,
-      col("user_id") === col("click_user") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 6 HOURS") &&
-        col("click_ts") <= col("purchase_ts"),
-      "left_semi")
-  }
+  def clickAttributionSemi(events: DataFrame): DataFrame =
+    clickPurchaseJoin(events, "left_semi")
 
   /** LEFT OUTER variant of [[clickAttribution]]: every purchase emits,
     * attributed or not. In streaming this is the semantics watermarks
@@ -307,25 +278,10 @@ object StreamingOps extends QueryModule {
     * can still arrive, so the null rows surface exactly one state-horizon
     * late, while matches still emit eagerly. Batch: a plain left join.
     */
-  def clickAttributionOuter(events: DataFrame): DataFrame = {
-    val clicks = events
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    purchases.join(clicks,
-      col("user_id") === col("click_user") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 6 HOURS") &&
-        col("click_ts") <= col("purchase_ts"),
-      "left_outer")
+  def clickAttributionOuter(events: DataFrame): DataFrame =
+    clickPurchaseJoin(events, "left_outer")
       .select(col("purchase_id"), col("click_id"), col("user_id"),
         col("click_ts"), col("purchase_ts"))
-  }
 
   /** FULL OUTER variant of [[clickAttribution]] — the audit view: every
     * purchase AND every click accounted for exactly once (unmatched
@@ -336,7 +292,18 @@ object StreamingOps extends QueryModule {
     * emit eagerly. `user_id` is coalesced across sides so click-only
     * rows keep their key. Batch: a plain full join.
     */
-  def clickAttributionFull(events: DataFrame): DataFrame = {
+  def clickAttributionFull(events: DataFrame): DataFrame =
+    clickPurchaseJoin(events, "full_outer")
+      .select(col("purchase_id"), col("click_id"),
+        coalesce(col("user_id"), col("click_user")).as("user_id"),
+        col("click_ts"), col("purchase_ts"))
+
+  /** Purchases joined to the clicks of the same user in the 6 hours up to
+    * the purchase, both sides under a 1-hour watermark: the setup shared
+    * by the four [[clickAttribution]] variants, which differ only in
+    * `joinType` and their output projection.
+    */
+  private def clickPurchaseJoin(events: DataFrame, joinType: String): DataFrame = {
     val clicks = events
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
@@ -351,10 +318,7 @@ object StreamingOps extends QueryModule {
       col("user_id") === col("click_user") &&
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 6 HOURS") &&
         col("click_ts") <= col("purchase_ts"),
-      "full_outer")
-      .select(col("purchase_id"), col("click_id"),
-        coalesce(col("user_id"), col("click_user")).as("user_id"),
-        col("click_ts"), col("purchase_ts"))
+      joinType)
   }
 
   // ---- batch entries for the driver's oracle gate ----

@@ -24,6 +24,11 @@ class AllQueriesSpec extends AnyFunSuite {
       "rowsOnlyQueries names a query that does not exist")
   }
 
+  test("unknownQueries returns exactly the names that are not query keys") {
+    assert(SparkEntry.unknownQueries(Seq("q01_pricing_summary", "nope")) == Seq("nope"))
+    assert(SparkEntry.unknownQueries(Seq()) == Seq())
+  }
+
   test("no query emits binary or nested output — the driver's pandas gate can't sort them") {
     // Round-12 q131: raw binary output passed the hex-normalizing local
     // check yet crashed the driver's canonicalization (`unhashable
