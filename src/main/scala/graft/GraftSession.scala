@@ -41,6 +41,10 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       // no web UI: nothing reads it, and it binds a port per session
       .config("spark.ui.enabled", "false")
+      // sink and committer writes: chmod/readlink in process, not forked (graft.LocalFs)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      // checkpoint logs and state deltas: the same, through FileContext (graft.LocalFs)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

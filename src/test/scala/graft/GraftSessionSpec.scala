@@ -1,5 +1,8 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The session posture: Spark's defaults plus `GraftSession.local`'s
@@ -25,5 +28,18 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(spark.conf.get("spark.ui.enabled") == "false")
+    assert(spark.conf.get("spark.hadoop.fs.file.impl") == "graft.NioLocalFileSystem")
+    assert(spark.conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") == "graft.NioLocalFs")
+  }
+
+  test("file: paths resolve to the in-process local file system, cached instance included") {
+    // Hadoop caches one `file:` FileSystem per JVM: a session that set the
+    // key after something else had created it would still get Hadoop's own
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    assert(FileSystem.get(new URI("file:///"), hadoopConf).getClass == classOf[NioLocalFileSystem])
+    assert(FileSystem.get(new URI("file:///"), spark.sessionState.newHadoopConf()).getClass ==
+      classOf[NioLocalFileSystem])
+    assert(FileContext.getFileContext(new URI("file:///"), hadoopConf).getDefaultFileSystem.getClass ==
+      classOf[NioLocalFs])
   }
 }

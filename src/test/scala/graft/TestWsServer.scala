@@ -14,7 +14,7 @@ import scala.collection.mutable
   * the client sends (subscriptions, interval messages), and lets tests
   * push frames / drop the connection to script the reconnect scenario
   * the reference handles (`/root/reference/src/wsclient.hpp:158-166`).
-  * Protocol essentials only: FIN text frames, client-masked input,
+  * Protocol essentials only: FIN text and binary frames, client-masked input,
   * ping/pong passthrough, close handshake.
   */
 final class TestWsServer {
@@ -112,6 +112,9 @@ final class TestWsServer {
 
   /** Push a text frame to the connected client. */
   def send(msg: String): Unit = sendRaw(0x1, msg.getBytes(UTF_8))
+
+  /** Push a binary frame to the connected client. */
+  def sendBinary(payload: Array[Byte]): Unit = sendRaw(0x2, payload)
 
   /** pongs received for `roundTrip` pings */
   private var pongs = 0

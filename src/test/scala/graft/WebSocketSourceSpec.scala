@@ -314,6 +314,35 @@ class WebSocketSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a binary frame between text frames neither stalls the stream nor takes an offset (protocol-level)") {
+    // the source reads text frames only; a binary frame must be passed
+    // over with the next frame requested, or every later frame (and the
+    // ping's pong) waits behind it for good
+    import graft.sources.websocket.{WebSocketMicroBatchStream, WsInputPartition, WsOffset}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val server = new TestWsServer
+    val stream = new WebSocketMicroBatchStream(new CaseInsensitiveStringMap(
+      java.util.Map.of("url", server.url, "key", "websocket_1",
+        "reconnectDelayMs", "200", "connectTimeoutMs", "2000")))
+    try {
+      assert(eventually()(server.totalConnects >= 1), "source never connected")
+      val start = stream.initialOffset().asInstanceOf[WsOffset]
+      server.send("text-1")
+      server.sendBinary(Array[Byte](0, 1, 2, -1))
+      server.send("text-2")
+      assert(server.roundTrip(), "the stream stalled after a binary frame")
+      val end = stream.latestOffset().asInstanceOf[WsOffset]
+      assert(end.n == 2L, s"expected the two text frames at offsets 0-1, latest is ${end.n}")
+      val rows = stream.planInputPartitions(start, end).toSeq
+        .flatMap(_.asInstanceOf[WsInputPartition].rows).map(_._1)
+      assert(rows == Seq("text-1", "text-2"))
+      assert(server.totalConnects == 1, "a binary frame cost the connection")
+    } finally {
+      stream.stop()
+      server.close()
+    }
+  }
+
   test("interval messages are re-sent on a fixed cadence") {
     val server = new TestWsServer
     try {
