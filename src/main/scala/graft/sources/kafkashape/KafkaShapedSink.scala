@@ -1,5 +1,7 @@
 package graft.sources.kafkashape
 
+import java.util.concurrent.ThreadLocalRandom
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
@@ -107,8 +109,7 @@ object KafkaShapedSink {
       topic: Option[String] = None): Unit = {
     val records = batch
       .withColumn("partition",
-        when(col("key").isNull,
-          floor(rand() * numPartitions).cast("int"))
+        when(col("key").isNull, randomPartition(lit(numPartitions)))
           .otherwise(pmod(hash(col("key")), lit(numPartitions))))
       .withColumn("ts", recordTimestamp())
     topic match {
@@ -116,7 +117,10 @@ object KafkaShapedSink {
         records.drop("topic").write.mode("overwrite")
           .parquet(s"$path/topic=${escapePathName(t)}/epoch=$epochId")
       case None =>
-        records.withColumn("epoch", lit(epochId))
+        // a string names the same `epoch=<n>` directory; generated code
+        // holds a string literal by reference but inlines a long one, so
+        // a long would compile a new class for every epoch
+        records.withColumn("epoch", lit(epochId.toString))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("topic", "epoch")
@@ -132,4 +136,10 @@ object KafkaShapedSink {
     */
   private val recordTimestamp =
     udf(() => System.currentTimeMillis()).asNondeterministic()
+
+  /** A uniformly random partition in [0, n) for a NULL key. Not
+    * `rand()`: its seed, new for every call, is inlined into the
+    * generated code, so every epoch would compile a new class. */
+  private val randomPartition =
+    udf((n: Int) => ThreadLocalRandom.current().nextInt(n)).asNondeterministic()
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
+
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
@@ -26,12 +28,13 @@ case class BookUpdate(
   * arriving in a LATER micro-batch with a LOWER seq (transport replay,
   * source restart) would otherwise apply old-on-new and corrupt a level.
   *
-  * State-schema note: adding `max_seq` widened the state product — a
-  * checkpoint written by the pre-`max_seq` build does NOT restore into
-  * this schema (Spark's state store validates compatibility at query
-  * start and fails loudly rather than corrupting). The operational
-  * upgrade path for a lossy-delta book is the protocol's own: start a
-  * fresh checkpoint and let the first snapshot rebuild state — books
+  * State-schema note: the state store holds a book as a [[PackedBook]].
+  * A checkpoint written with another state schema (the `Map` columns
+  * of earlier builds, or no `max_seq`) does NOT restore into it
+  * (Spark's state store validates compatibility at query start and
+  * fails loudly rather than corrupting). The operational upgrade path
+  * for a lossy-delta book is the protocol's own: start a fresh
+  * checkpoint and let the first snapshot rebuild state — books
   * self-heal by construction, so nothing durable is lost.
   */
 case class Book(
@@ -47,6 +50,44 @@ object Book {
     Book(market, 0L, Map.empty, Map.empty, Long.MinValue)
 }
 
+/** A [[Book]] as the state store keeps it: each side's levels packed as
+  * (price, size) double pairs in a byte array. A binary column decodes
+  * through the same generated code every batch. A `Map` column decodes
+  * through lambda variables that Spark renumbers each time it plans a
+  * batch, so every batch would compile a new state deserializer and run
+  * it interpreted until the JIT compiled it again.
+  */
+case class PackedBook(
+    market: String,
+    n_updates: Long,
+    bids: Array[Byte],
+    asks: Array[Byte],
+    max_seq: Long)
+
+object PackedBook {
+  def pack(b: Book): PackedBook =
+    PackedBook(b.market, b.n_updates, levels(b.bids), levels(b.asks), b.max_seq)
+
+  def unpack(p: PackedBook): Book =
+    Book(p.market, p.n_updates, levels(p.bids), levels(p.asks), p.max_seq)
+
+  private def levels(m: Map[Double, Double]): Array[Byte] = {
+    val buf = ByteBuffer.allocate(16 * m.size)
+    m.foreach { case (price, size) => buf.putDouble(price).putDouble(size) }
+    buf.array
+  }
+
+  private def levels(bytes: Array[Byte]): Map[Double, Double] = {
+    val buf = ByteBuffer.wrap(bytes)
+    val m = Map.newBuilder[Double, Double]
+    while (buf.hasRemaining) {
+      val price = buf.getDouble
+      m += price -> buf.getDouble
+    }
+    m.result()
+  }
+}
+
 /** Top-of-book summary emitted per market per micro-batch. */
 case class TopOfBook(
     market: String,
@@ -59,8 +100,8 @@ case class TopOfBook(
 /** Order-book reconstruction — the reference's end-to-end semantic
   * (§1.5 of SURVEY.md: lossy delta stream + periodic snapshot
   * re-request) as a first-class stateful operator. State is the full
-  * keyed book (two price→size maps) in the state store, partitioned by
-  * market: each micro-batch touches only markets with updates, state
+  * keyed book (two price→size maps, stored as a [[PackedBook]]) in the
+  * state store, partitioned by market: each micro-batch touches only markets with updates, state
   * size is bounded by live price levels (snapshots CLEAR the book, so a
   * reconnect gap can never leave stale levels behind — that is the whole
   * point of the snapshot protocol). Emits top-of-book per market per
@@ -116,15 +157,15 @@ object OrderBook {
   /** Streaming reconstruction: update-mode top-of-book per market per
     * batch. */
   def topOfBook(updates: Dataset[BookUpdate]): Dataset[TopOfBook] = {
-    implicit val stateEnc = Encoders.product[Book]
+    implicit val stateEnc = Encoders.product[PackedBook]
     implicit val outEnc = Encoders.product[TopOfBook]
     updates
       .groupByKey(_.market)(Encoders.STRING)
-      .mapGroupsWithState[Book, TopOfBook](GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[BookUpdate], state: GroupState[Book]) =>
-          val prev = state.getOption.getOrElse(Book.empty(key))
+      .mapGroupsWithState[PackedBook, TopOfBook](GroupStateTimeout.NoTimeout) {
+        (key: String, it: Iterator[BookUpdate], state: GroupState[PackedBook]) =>
+          val prev = state.getOption.map(PackedBook.unpack).getOrElse(Book.empty(key))
           val next = fold(prev, it)
-          state.update(next)
+          state.update(PackedBook.pack(next))
           top(next)
       }
   }

@@ -1,7 +1,9 @@
 package graft
 
 import graft.sources.kafkashape.KafkaShapedSink
-import graft.streaming.{Book, BookUpdate, OrderBook, TopOfBook}
+import graft.streaming.{Book, BookUpdate, OrderBook, PackedBook, TopOfBook}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -297,5 +299,54 @@ class OrderBookSpec extends AnyFunSuite {
     val unknown = mk(17, "BTC", "BUY", 102.0, 1.0)
     assert(OrderBook.fold(book, Iterator(unknown)) == book)
     assert(OrderBook.batchReference(script :+ unknown) == OrderBook.batchReference(script))
+  }
+
+  test("a packed book unpacks to the same levels, bit for bit") {
+    val book = Book("BTC", 7L,
+      Map(99.0 -> 1.0, -0.0 -> 2.0, Double.MaxValue -> Double.MinPositiveValue),
+      Map(101.5 -> Double.NaN), 42L)
+    val back = PackedBook.unpack(PackedBook.pack(book))
+    assert(back.market == book.market && back.n_updates == book.n_updates &&
+      back.max_seq == book.max_seq)
+    def bits(m: Map[Double, Double]) = m.toSeq
+      .map { case (p, q) => (java.lang.Double.doubleToRawLongBits(p), java.lang.Double.doubleToRawLongBits(q)) }
+      .sorted
+    assert(bits(back.bids) == bits(book.bids) && bits(back.asks) == bits(book.asks))
+    assert(PackedBook.unpack(PackedBook.pack(Book.empty("ETH"))) == Book.empty("ETH"))
+  }
+
+  test("a running top-of-book stream into the sink compiles no new class after its first batches") {
+    // the state deserializer and the sink's write plan must generate the
+    // same code every epoch: a new class each epoch runs interpreted
+    // until the JIT compiles it again
+    import org.apache.spark.sql.functions.{col, lit, struct, to_json}
+    implicit val sqlCtx = spark.sqlContext
+    implicit val enc = org.apache.spark.sql.Encoders.product[BookUpdate]
+    val dir = java.nio.file.Files.createTempDirectory("book_codegen").toString
+    val mem = MemoryStream[BookUpdate]
+    val tops = OrderBook.topOfBook(mem.toDS()).toDF()
+    val q = tops.select(col("market").as("key"),
+        to_json(struct(tops.columns.map(col).toIndexedSeq: _*)).as("value"), lit("tops").as("topic"))
+      .writeStream.outputMode("update")
+      .option("checkpointLocation", s"$dir/chk")
+      .foreachBatch { (batch: DataFrame, epoch: Long) =>
+        KafkaShapedSink.writeEpoch(batch, epoch, s"$dir/sink", 4)
+      }
+      .start()
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      var seq = 0L
+      val perEpoch = (1 to 6).map { _ =>
+        val before = compiled
+        mem.addData((1 to 40).map { j =>
+          seq += 1
+          mk(seq, s"M${j % 8}", if (j % 2 == 0) "bid" else "ask", 100.0 + j % 5, j.toDouble)
+        })
+        q.processAllAvailable()
+        compiled - before
+      }
+      assert(spark.streams.active.map(_.id).toSeq == Seq(q.id), "another stream compiles alongside")
+      assert(perEpoch.drop(2).forall(_ == 0), s"classes compiled per epoch: $perEpoch")
+    } finally q.stop()
   }
 }

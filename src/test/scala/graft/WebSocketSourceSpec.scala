@@ -472,6 +472,31 @@ class WebSocketSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  test("the fixed-topic sink compiles no new class after its first epochs") {
+    // a nullable key keeps the random-partition branch in the write plan;
+    // its generated code must be the same every epoch
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = Files.createTempDirectory("codegen_out").toString
+    val chk = Files.createTempDirectory("codegen_chk").toString
+    val mem = MemoryStream[String]
+    val q = KafkaShapedSink.start(mem.toDF().select(col("value").as("key"), col("value")),
+      outDir, chk, topic = Some("t"), numPartitions = 8)
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      val perEpoch = (1 to 5).map { e =>
+        val before = compiled
+        mem.addData((1 to 20).map(i => s"v$e-$i"))
+        q.processAllAvailable()
+        compiled - before
+      }
+      assert(spark.streams.active.map(_.id).toSeq == Seq(q.id), "another stream compiles alongside")
+      assert(perEpoch.drop(2).forall(_ == 0), s"classes compiled per epoch: $perEpoch")
+    } finally q.stop()
+  }
+
   test("sink epoch writes are idempotent: a replayed epoch never double-delivers") {
     // foreachBatch re-runs the last epoch after a crash between sink
     // write and commit; the per-(topic, epoch) dynamic overwrite must
